@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev-only scale probe for the DISTRIBUTED maintenance rewrites
   * (round-16 items: task-side writes, distributed cluster/compaction):
-  * loads orders×8 into a `graft.storage = parquet` lake table (the
+  * loads orders×8 into a lake table (the
   * 12M-row ingest itself exercises the task-side write plane that the
   * old driver-resident shape could not survive), then times
   * `CALL system.cluster` (range-shuffle sort rewrite),
@@ -31,8 +31,7 @@ object MaintBench {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (o_orderkey BIGINT, o_custkey BIGINT, " +
       "o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     val base = spark.read.parquet(s"$sfDir/orders.parquet")
       .selectExpr("o_orderkey", "o_custkey", "o_orderstatus",
         "o_totalprice")
@@ -76,8 +75,7 @@ object MaintBench {
     spark.sql(s"DROP TABLE IF EXISTS $te")
     spark.sql(s"CREATE TABLE $te (o_orderkey BIGINT, o_custkey BIGINT, " +
       "o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     timed(s"eqd_ingest_x$copies") {
       (1 to copies).map(_ => base).reduce(_ union _)
         .repartition(16).writeTo(te).append()
@@ -169,8 +167,7 @@ object MaintBench {
     val tc2 = "gmw2.maint_race"
     spark.sql(s"CREATE TABLE $tc1 (o_orderkey BIGINT, o_custkey BIGINT, " +
       "o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     timed(s"cw_ingest_x$copies") {
       (1 to copies).map(_ => base).reduce(_ union _)
         .repartition(16).writeTo(tc1).append()
@@ -244,8 +241,7 @@ object MaintBench {
     }
     spark.sql("CREATE TABLE gnw1.maint_nw (o_orderkey BIGINT, " +
       "o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     timed(s"nw_ingest_x$copies") {
       (1 to copies).map(_ => base).reduce(_ union _)
         .repartition(16).writeTo("gnw1.maint_nw").append()

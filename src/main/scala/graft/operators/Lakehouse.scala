@@ -254,39 +254,14 @@ object Lakehouse {
 
   // ---- row-level SQL over the DSv2 catalog table ---------------------------
 
-  /** TBLPROPERTIES clause for lake tables: base properties plus the
-    * storage mode override (`-Dgraft.lake.storage=parquet` routes every
-    * registry fixture through REAL parquet file groups — the spec uses
-    * it to prove both storage modes produce the identical relation). */
-  private[graft] def tblProps(extra: (String, String)*): String = {
-    // the global A/B override wins over a fixture's explicit storage
-    // choice (and must not duplicate the key — Spark rejects duplicate
-    // TBLPROPERTIES entries)
-    val over = sys.props.get("graft.lake.storage").map("graft.storage" -> _)
-    val all = extra.filterNot(kv => over.exists(_._1 == kv._1)) ++ over
-    if (all.isEmpty) ""
-    else all.map { case (k, v) => s"'$k' = '$v'" }
-      .mkString(" TBLPROPERTIES (", ", ", ")")
-  }
-
-  /** Storage prop for the fixtures the r21 A/B measured FASTER on real
-    * parquet file groups than on memory-backed rows: a memory-backed
-    * scan ships every row INSIDE each task closure (5-11 MB serialized
-    * task, driver-serialized per task — guide §5 "the driver should do
-    * almost no data work"), while parquet-backed partitions ship paths
-    * and decode columnar bytes executor-side. Interleaved A/B at sf0.1
-    * (dev/r21/ab_lake_{mem,pq}{1,2}.json, min-of-2): the 14 flipped
-    * queries total 30.6 → 20.1 s. Fixtures that LOST (partition fan-out
-    * writes many tiny files: join_spj_storage, ref_partition_transform,
-    * ref_cluster_files) and the metadata-table fixtures stay
-    * memory-backed. */
-  private val pqStore = "graft.storage" -> "parquet"
+  /** TBLPROPERTIES clause of the merge-on-read fixtures. */
+  private val morProps = " TBLPROPERTIES ('graft.mode' = 'merge-on-read')"
 
   /** Materialize `out` off the lake table (localCheckpoint pins the
     * computed rows in the block manager), then DROP the query's tables:
     * a registry query must not leave its table + full commit history on
     * the driver heap for the rest of a 240-query bench run (VERDICT r11
-    * task 2). Parquet-backed storage is deleted by the DROP too. */
+    * task 2). The table's parquet files are deleted by the DROP too. */
   private[graft] def releasing(spark: SparkSession, out: DataFrame,
       tables: String*): DataFrame = {
     val pinned = out.localCheckpoint(true)
@@ -294,7 +269,7 @@ object Lakehouse {
     pinned
   }
 
-  /** Create (or recreate) the in-memory row-level table and load it with
+  /** Create (or recreate) the row-level lake table and load it with
     * the `previous` upsert-fixture slice of orders. Returns the qualified
     * name. One catalog instance per session ⇒ per-session isolation. */
   private def freshLakeTable(
@@ -304,8 +279,7 @@ object Lakehouse {
     val t = s"graftlake.orders_$suffix"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps(pqStore))
+      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)")
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .filter(col("o_orderkey") % 3 =!= 0)
@@ -367,7 +341,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps("graft.mode" -> "merge-on-read", pqStore))
+      morProps)
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .filter(col("o_orderkey") % 3 =!= 0)
@@ -436,7 +410,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps("graft.mode" -> "merge-on-read", pqStore))
+      morProps)
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .filter(col("o_orderkey") % 3 =!= 0)
@@ -462,7 +436,7 @@ object Lakehouse {
 
   /** The sync-merge relation derived set-algebraically: matched rows
     * take the batch's values, batch-only rows insert, target-only rows
-    * drop when 'F' else demote to 'S'. Shared by both storage modes. */
+    * drop when 'F' else demote to 'S'. */
   private val mergeSyncOracle =
     """WITH target AS (
       |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
@@ -565,9 +539,9 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $tOrd")
     spark.sql(s"DROP TABLE IF EXISTS $tCust")
     spark.sql(s"CREATE TABLE $tOrd (bucket BIGINT, o_custkey BIGINT, " +
-      "total DOUBLE) PARTITIONED BY (bucket)" + tblProps())
+      "total DOUBLE) PARTITIONED BY (bucket)")
     spark.sql(s"CREATE TABLE $tCust (bucket BIGINT, c_custkey BIGINT, " +
-      "c_mktsegment STRING) PARTITIONED BY (bucket)" + tblProps())
+      "c_mktsegment STRING) PARTITIONED BY (bucket)")
     Tables(spark, sfDir, "orders")
       .groupBy(col("o_custkey"))
       .agg(dsum(col("o_totalprice")).as("total"))
@@ -622,8 +596,7 @@ object Lakehouse {
     val t = "graftlake.byname_orders"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps())
+      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)")
     Tables(spark, sfDir, "orders")
       .filter(col("o_orderkey") % 7 === 0)
       // reversed column order relative to the table definition
@@ -660,7 +633,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
       "(o_bucket BIGINT, o_orderkey BIGINT, o_orderstatus STRING, " +
-      "o_totalprice DOUBLE) PARTITIONED BY (o_bucket)" + tblProps(pqStore))
+      "o_totalprice DOUBLE) PARTITIONED BY (o_bucket)")
     Tables(spark, sfDir, "orders")
       .select(pmod(col("o_orderkey"), lit(8L)).as("o_bucket"),
         col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -708,7 +681,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps("graft.mode" -> "merge-on-read", pqStore))
+      morProps)
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .filter(col("o_orderkey") % 3 =!= 0)
@@ -758,7 +731,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps("graft.mode" -> "merge-on-read", pqStore))
+      morProps)
     val prev = Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .filter(col("o_orderkey") % 3 =!= 0)
@@ -830,8 +803,7 @@ object Lakehouse {
     val t = "graftlake.orders_evolve"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps(pqStore))
+      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)")
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .filter(col("o_orderkey") % 3 =!= 0)
@@ -892,8 +864,7 @@ object Lakehouse {
     val t = "graftlake.orders_rename"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps(pqStore))
+      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)")
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .filter(col("o_orderkey") % 3 =!= 0)
@@ -936,7 +907,7 @@ object Lakehouse {
     val t = "graftlake.orders_defwiden"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_qty INT, o_totalprice DOUBLE)" + tblProps(pqStore))
+      "(o_orderkey BIGINT, o_qty INT, o_totalprice DOUBLE)")
     def base = Tables(spark, sfDir, "orders")
       .select(col("o_orderkey"),
         (col("o_orderkey") % 1000).cast("int").as("o_qty"),
@@ -979,7 +950,7 @@ object Lakehouse {
     val t = "graftlake.orders_cluster"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_totalprice DOUBLE)" + tblProps())
+      "(o_orderkey BIGINT, o_totalprice DOUBLE)")
     val base = Tables(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
     // interleaved appends: every file spans the whole key range
@@ -1017,7 +988,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (ts TIMESTAMP_NTZ, user_id BIGINT, " +
       "event_type STRING, value DOUBLE) " +
-      "PARTITIONED BY (days(ts), bucket(8, user_id))" + tblProps())
+      "PARTITIONED BY (days(ts), bucket(8, user_id))")
     Tables(spark, sfDir, "events")
       .select("ts", "user_id", "event_type", "value")
       .writeTo(t).append()
@@ -1052,8 +1023,7 @@ object Lakehouse {
     spark.sql(s"CREATE TABLE $t (o_orderkey BIGINT, " +
       "meta STRUCT<status: STRING, bucket: BIGINT>, " +
       "amounts ARRAY<DOUBLE>, " +
-      "tags MAP<STRING, BIGINT>) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "tags MAP<STRING, BIGINT>)")
     Tables(spark, sfDir, "orders")
       .select(col("o_orderkey"),
         struct(col("o_orderstatus").as("status"),
@@ -1101,7 +1071,7 @@ object Lakehouse {
     val t = "graftlake.orders_wap"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (o_orderkey BIGINT, " +
-      "o_orderstatus STRING, o_totalprice DOUBLE)" + tblProps(pqStore))
+      "o_orderstatus STRING, o_totalprice DOUBLE)")
     val base = Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     // the audited-good production state, tagged
@@ -1224,7 +1194,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)" +
-      tblProps("graft.mode" -> "merge-on-read", pqStore))
+      morProps)
     val tmp = sys.props("java.io.tmpdir")
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
       "_pid" + ProcessHandle.current().pid()
@@ -1287,7 +1257,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (o_orderkey BIGINT, o_custkey BIGINT, " +
       "o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "PARTITIONED BY (o_orderstatus)" + tblProps())
+      "PARTITIONED BY (o_orderstatus)")
     val base = Tables(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"))
@@ -1338,7 +1308,7 @@ object Lakehouse {
     val t = "graftlake.events_ssink"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (event_id BIGINT, event_type STRING, " +
-      "user_id BIGINT, value DOUBLE)" + tblProps(pqStore))
+      "user_id BIGINT, value DOUBLE)")
     val tmp = sys.props("java.io.tmpdir")
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
       "_pid" + ProcessHandle.current().pid()
@@ -1391,11 +1361,8 @@ object Lakehouse {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.orders_eqd"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    // parquet storage explicitly: the keys files are real parquet the
-    // scan tasks read (memory storage has no upsert surface)
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)")
     val base = Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     base.filter(col("o_orderkey") % 3 =!= 0).writeTo(t).append() // prev
@@ -1440,8 +1407,7 @@ object Lakehouse {
     val t = "graftlake.orders_eqdcf"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)")
     val base = Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     base.filter(col("o_orderkey") % 3 =!= 0).writeTo(t).append()
@@ -1495,8 +1461,7 @@ object Lakehouse {
     val t = "graftlake.orders_mdel"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
-      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)")
     val base = Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     val maxKey = base.agg(max("o_orderkey")).head.getLong(0)
@@ -1538,8 +1503,7 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, " +
-      "CONSTRAINT price_pos CHECK (o_totalprice > 0)) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "CONSTRAINT price_pos CHECK (o_totalprice > 0))")
     val base = Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     base.writeTo(t).append()
@@ -1599,8 +1563,7 @@ object Lakehouse {
     spark.sql(s"CREATE TABLE $t " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE) " +
       "PARTITIONED BY (o_orderstatus) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .writeTo(t).append()
@@ -1642,13 +1605,11 @@ object Lakehouse {
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .createOrReplaceTempView("ctas_src_orders")
-    spark.sql(s"CREATE TABLE $t TBLPROPERTIES " +
-      "('graft.storage' = 'parquet') AS " +
+    spark.sql(s"CREATE TABLE $t AS " +
       "SELECT o_orderkey, o_orderstatus, o_totalprice " +
       "FROM ctas_src_orders WHERE o_orderkey % 2 = 0")
     // the reload: new schema, new contents, one atomic flip
-    spark.sql(s"REPLACE TABLE $t TBLPROPERTIES " +
-      "('graft.storage' = 'parquet') AS " +
+    spark.sql(s"REPLACE TABLE $t AS " +
       "SELECT o_orderkey, o_orderstatus " +
       "FROM ctas_src_orders WHERE o_orderkey % 3 = 0")
     releasing(spark, spark.table(t).orderBy("o_orderkey"), t)
@@ -1691,8 +1652,7 @@ object Lakehouse {
     val tB = "gcw2.cw_orders"
     spark.sql(s"CREATE TABLE $tA " +
       "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     val base = Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     // v1 (writer A): keys ≡ 0 (mod 3)

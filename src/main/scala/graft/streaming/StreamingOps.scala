@@ -85,58 +85,22 @@ object StreamingOps {
       queryCap: Int = 2)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    // dev-only override so the per-round A/B can sweep the cap without a
-    // recompile; production sizes this per query at first deploy (above).
-    // `queryCap` is that per-query sizing: the stream-stream joins commit
-    // FOUR state stores per partition per side each batch, and their
-    // in-flight state is the smallest in the registry, so they take 1
-    // (r21 interleaved A/B, min-of-2 at sf0.1: full_outer 9.17→7.03,
-    // join 3.82→2.54, semi 6.72→5.82, left_outer 6.59→6.05; the
-    // aggregation-shaped queries measured WORSE at 1 and keep 2).
-    val cap = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-      .filter(_ > 0) // 0/negative would poison every streaming shuffle
-      .getOrElse(queryCap)
-    // never RAISE the count: a session already below the state-volume
+    // `queryCap` is the per-query sizing production does at first deploy
+    // (above): the stream-stream joins commit FOUR state stores per
+    // partition per side each batch, and their in-flight state is the
+    // smallest in the registry, so they take 1 (r21 interleaved A/B,
+    // min-of-2 at sf0.1: full_outer 9.17→7.03, join 3.82→2.54, semi
+    // 6.72→5.82, left_outer 6.59→6.05; the aggregation-shaped queries
+    // measured WORSE at 1 and keep 2). They run on the default
+    // HDFS-backed state store: r22's RocksDB + join-state-format-v3
+    // variant measured slower (stream_stream_join 2.51/2.67 s on HDFS vs
+    // 3.98/4.58 s on RocksDB, dev/r22/ab_{hdfs2,rocks3}_{1,2}.json).
+    // Never RAISE the count: a session already below the state-volume
     // target must not be lifted to the cap (that would ADD fan-out)
-    val target = math.min(cap, scala.util.Try(prev.toInt).getOrElse(cap))
+    val target = math.min(queryCap,
+      scala.util.Try(prev.toInt).getOrElse(queryCap))
     spark.conf.set(key, target.toString)
     try body finally spark.conf.set(key, prev)
-  }
-
-  /** Pin the state backend for the stream-stream joins while `body` runs:
-    * RocksDB provider + join state format v3 (Spark 4's single-store
-    * layout — ONE store per partition holding all four join-state column
-    * families as RocksDB virtual column families, vs format 2's FOUR
-    * separate stores per partition). A stream-stream join's per-batch cost
-    * at small in-flight state is store-commit fan-out (r21 DevDiag:
-    * commitTimeMs ~160-210 ms/batch across the 4 HDFS-backed stores), so
-    * collapsing 4 commits into 1 attacks the measured wall directly, and
-    * changelog checkpointing writes the batch's delta instead of
-    * snapshotting the whole store. The format is pinned by the first
-    * checkpoint, never changed on an existing one — every drain here uses
-    * a fresh per-query temp checkpoint, exactly the "sized/chosen once at
-    * first deploy" contract the partition cap documents above.
-    * Dev A/B knob: -Dgraft.stream.join.state=hdfs2 restores the previous
-    * backend without a recompile (SPARK_GRAFT_JAVA_OPTS passthrough).
-    */
-  private def withJoinStateBackend[A](spark: SparkSession)(body: => A): A = {
-    if (sys.props.get("graft.stream.join.state").contains("hdfs2")) body
-    else {
-      val confs = Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          ("org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider"),
-        "spark.sql.streaming.join.stateFormatVersion" -> "3",
-        ("spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled") -> "true")
-      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
   }
 
   /** Await an AvailableNow drain AND prove it ingested at least one row.
@@ -433,8 +397,8 @@ object StreamingOps {
     * table must equal the batch aggregate — the same oracle as the
     * update-mode query, now through the full SQL merge machinery per
     * batch. At 100 TB the per-batch merge cost is the table format's
-    * touched-file rewrite (here coarsened to the whole in-memory group,
-    * like the rest of the graftlake harness table).
+    * touched-file rewrite (here coarsened to the whole file group, like
+    * the rest of the graftlake harness table).
     */
   def mergeSink(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.catalog.graftlake",
@@ -516,7 +480,7 @@ object StreamingOps {
     val src = eventStream(spark, sfDir)
     val joined = signupPurchaseJoin(src, "inner", keepSentinels = false)
     val name = s"graft_stream_ssjoin_${sinkId.incrementAndGet()}"
-    withJoinStateBackend(spark) { withStreamingPartitions(spark, queryCap = 1) {
+    withStreamingPartitions(spark, queryCap = 1) {
       val q = joined.writeStream
         .outputMode("append")
         .format("memory")
@@ -524,7 +488,7 @@ object StreamingOps {
         .trigger(Trigger.AvailableNow())
         .start()
       awaitDrained(q)
-    } }
+    }
     spark.table(name)
       .select(col("signup_id"), col("purchase_id"),
         col("s_user").as("user_id"),
@@ -1111,7 +1075,7 @@ object StreamingOps {
       .withColumn("ts", col("ts").cast("timestamp"))
     val joined = signupPurchaseJoin(src, "leftOuter", keepSentinels = true)
     val name = s"graft_stream_louter_${sinkId.incrementAndGet()}"
-    withJoinStateBackend(spark) { withStreamingPartitions(spark, queryCap = 1) {
+    withStreamingPartitions(spark, queryCap = 1) {
       val q = joined.writeStream
         .outputMode("append")
         .format("memory")
@@ -1119,7 +1083,7 @@ object StreamingOps {
         .trigger(Trigger.AvailableNow())
         .start()
       awaitDrained(q)
-    } }
+    }
     spark.table(name)
       .filter(col("s_user") >= 0)
       .select(col("signup_id"), col("purchase_id"),
@@ -1149,7 +1113,7 @@ object StreamingOps {
       .withColumn("ts", col("ts").cast("timestamp"))
     val joined = signupPurchaseJoin(src, "left_semi", keepSentinels = true)
     val name = s"graft_stream_semi_${sinkId.incrementAndGet()}"
-    withJoinStateBackend(spark) { withStreamingPartitions(spark, queryCap = 1) {
+    withStreamingPartitions(spark, queryCap = 1) {
       val q = joined.writeStream
         .outputMode("append")
         .format("memory")
@@ -1157,7 +1121,7 @@ object StreamingOps {
         .trigger(Trigger.AvailableNow())
         .start()
       awaitDrained(q)
-    } }
+    }
     spark.table(name)
       .filter(col("s_user") >= 0)
       .select(col("signup_id"), col("s_user").as("user_id"),
@@ -1203,7 +1167,7 @@ object StreamingOps {
       .withColumn("ts", col("ts").cast("timestamp"))
     val joined = signupPurchaseJoin(src, "fullOuter", keepSentinels = true)
     val name = s"graft_stream_fouter_${sinkId.incrementAndGet()}"
-    withJoinStateBackend(spark) { withStreamingPartitions(spark, queryCap = 1) {
+    withStreamingPartitions(spark, queryCap = 1) {
       val q = joined.writeStream
         .outputMode("append")
         .format("memory")
@@ -1211,7 +1175,7 @@ object StreamingOps {
         .trigger(Trigger.AvailableNow())
         .start()
       awaitDrained(q)
-    } }
+    }
     spark.table(name)
       .filter(coalesce(col("s_user"), col("p_user")) >= 0)
       .select(col("signup_id"), col("purchase_id"),

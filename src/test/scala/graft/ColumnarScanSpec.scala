@@ -26,8 +26,7 @@ class ColumnarScanSpec extends SparkTestBase {
     val t = "graftlake.spec_colscan"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING, d DOUBLE, " +
-      "dt DATE, ts TIMESTAMP, dec DECIMAL(12,2), b BOOLEAN) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "dt DATE, ts TIMESTAMP, dec DECIMAL(12,2), b BOOLEAN)")
     spark.range(0, 1000)
       .selectExpr("id AS k", "concat('v', id) AS s",
         "id * 0.5 AS d", "date_add(DATE'2024-01-01', CAST(id % 365 AS INT)) AS dt",
@@ -50,26 +49,21 @@ class ColumnarScanSpec extends SparkTestBase {
     assert(plan(proj).contains("ColumnarToRow"), plan(proj))
     assert(proj.agg(sum("dec")).collect().head.getDecimal(0) ==
       new java.math.BigDecimal("124875.00"))
-    // memory-storage twin is row-for-row identical
-    val m = "graftlake.spec_colscan_mem"
-    spark.sql(s"DROP TABLE IF EXISTS $m")
-    spark.sql(s"CREATE TABLE $m (k BIGINT, s STRING, d DOUBLE, " +
-      "dt DATE, ts TIMESTAMP, dec DECIMAL(12,2), b BOOLEAN)")
-    spark.table(t).writeTo(m).append()
-    assert(!plan(spark.table(m)).contains("ColumnarToRow"),
-      "memory storage stays on the row path")
-    assert(spark.table(m).orderBy("k").collect().toSeq ==
-      got.toSeq, "storage modes must produce the identical relation")
+    // the row reader serves the identical relation
+    sys.props("graft.lake.columnar") = "off"
+    try {
+      assert(!plan(spark.table(t)).contains("ColumnarToRow"))
+      assert(spark.table(t).orderBy("k").collect().toSeq == got.toSeq,
+        "row and columnar decode must produce the identical relation")
+    } finally sys.props -= "graft.lake.columnar"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"DROP TABLE IF EXISTS $m")
   }
 
   test("columnar decode resolves RENAME by write-time label and serves ADD-DEFAULT as a constant vector") {
     useCatalog()
     val t = "graftlake.spec_colscan_evolve"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     spark.range(0, 10).selectExpr("id AS k", "concat('old', id) AS s")
       .coalesce(1).writeTo(t).append()
     // the first file's parquet labels are (k, s); after the RENAME the
@@ -97,8 +91,7 @@ class ColumnarScanSpec extends SparkTestBase {
     val t = "graftlake.spec_colscan_dv"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     // > 1 decode batch (4096 rows) so the selection walk crosses batch
     // boundaries; deletes hit every batch AND fully clear the SECOND
     // 4096-row batch (the all-dead batch-skip path)
@@ -145,8 +138,7 @@ class ColumnarScanSpec extends SparkTestBase {
     val t = "graftlake.spec_colscan_mor"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 1000).selectExpr("id AS k", "CAST(0 AS BIGINT) AS v")
       .coalesce(1).writeTo(t).append()
     spark.range(500, 1500).selectExpr("id AS k", "CAST(1 AS BIGINT) AS v")
@@ -177,8 +169,8 @@ class ColumnarScanSpec extends SparkTestBase {
     val t = "graftlake.spec_colscan_widen"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, n INT, f FLOAT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')") // MoR: the DELETE below lands as a DV
+      // MoR: the DELETE below lands as a DV
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 100).selectExpr("id AS k", "CAST(id AS INT) AS n",
       "CAST(id AS FLOAT) / 2 AS f").coalesce(1).writeTo(t).append()
     spark.sql(s"ALTER TABLE $t ALTER COLUMN n TYPE BIGINT")
@@ -212,8 +204,7 @@ class ColumnarScanSpec extends SparkTestBase {
     useCatalog()
     val t = "graftlake.spec_colscan_meta"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT)")
     spark.range(0, 50).selectExpr("id AS k").coalesce(1).writeTo(t).append()
     spark.range(50, 80).selectExpr("id AS k").coalesce(1).writeTo(t).append()
     val df = spark.table(t).select(col("_file"), col("_pos"), col("k"))
@@ -241,8 +232,7 @@ class ColumnarScanSpec extends SparkTestBase {
     val t = "graftlake.spec_colscan_nested"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, m STRUCT<a: BIGINT, b: STRING>, " +
-      "xs ARRAY<DOUBLE>, tags MAP<STRING, BIGINT>) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "xs ARRAY<DOUBLE>, tags MAP<STRING, BIGINT>)")
     spark.range(0, 100).selectExpr("id AS k",
       "named_struct('a', id * 2, 'b', concat('s', id)) AS m",
       "array(CAST(id AS DOUBLE), id * 0.5) AS xs",
@@ -271,8 +261,7 @@ class ColumnarScanSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, m STRUCT<a: BIGINT, b: STRING>, " +
       "xs ARRAY<DOUBLE>, tags MAP<STRING, BIGINT>) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 100).selectExpr("id AS k",
       "named_struct('a', id * 2, 'b', concat('s', id)) AS m",
       "array(CAST(id AS DOUBLE), id * 0.5) AS xs",
@@ -296,20 +285,17 @@ class ColumnarScanSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
-  test("legacy and native writers interleave in one table; both readers agree") {
-    // VERDICT r16 task 7: the default write path is Spark's
-    // ParquetWriteSupport (no per-row Group trees); the legacy Group
-    // writer stays behind -Dgraft.lake.write.columnar=off. A table may
-    // hold files from BOTH (the knob can flip mid-life), including the
-    // one physical divergence (DECIMAL(<=9) as INT32 vs INT64) — both
-    // the row reader and the vectorized reader must serve the mix.
+  test("native-written files of every shape: both readers agree") {
+    // VERDICT r16 task 7: the write path is Spark's ParquetWriteSupport
+    // (no per-row Group trees), which stores DECIMAL(<=9) as INT32 —
+    // both the row reader and the vectorized reader must serve it, over
+    // several files of nested shapes, and through a row-level rewrite.
     useCatalog()
     val t = "graftlake.spec_mixed_writers"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING, small DECIMAL(7,2), " +
       "big DECIMAL(16,3), ts TIMESTAMP, xs ARRAY<BIGINT>, " +
-      "m STRUCT<a: BIGINT, b: STRING>, tags MAP<STRING, BIGINT>) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "m STRUCT<a: BIGINT, b: STRING>, tags MAP<STRING, BIGINT>)")
     def wave(lo: Long, hi: Long): Unit =
       spark.range(lo, hi).selectExpr("id AS k", "concat('v', id) AS s",
         "CAST(id AS DECIMAL(7,2)) / 4 AS small",
@@ -319,11 +305,9 @@ class ColumnarScanSpec extends SparkTestBase {
         "named_struct('a', id, 'b', concat('s', id)) AS m",
         "map('h', id % 7) AS tags")
         .coalesce(1).writeTo(t).append()
-    wave(0, 100) // native writer (default)
-    sys.props("graft.lake.write.columnar") = "off"
-    try wave(100, 200) // legacy Group writer
-    finally sys.props -= "graft.lake.write.columnar"
-    wave(200, 300) // native again
+    wave(0, 100)
+    wave(100, 200)
+    wave(200, 300)
     def answers(): (Long, java.math.BigDecimal, java.math.BigDecimal,
         Long, Long) = {
       val r = spark.table(t).agg(sum("k"), sum("small"), sum("big"),
@@ -339,9 +323,8 @@ class ColumnarScanSpec extends SparkTestBase {
         BigDecimal(i).setScale(3) * 3).sum.setScale(3).bigDecimal
         .toPlainString),
       (0L until 300L).map(_ * 2).sum, (0L until 300L).sum)
-    // columnar plan serves the mix
     assert(plan(spark.table(t)).contains("ColumnarToRow"),
-      s"mixed-writer files must stay columnar:\n${plan(spark.table(t))}")
+      s"native-written files must decode columnar:\n${plan(spark.table(t))}")
     assert(answers() == expected, s"columnar read: ${answers()}")
     // row path serves the identical answers
     sys.props("graft.lake.columnar") = "off"
@@ -349,11 +332,40 @@ class ColumnarScanSpec extends SparkTestBase {
       assert(!plan(spark.table(t)).contains("ColumnarToRow"))
       assert(answers() == expected, s"row read: ${answers()}")
     } finally sys.props -= "graft.lake.columnar"
-    // row-level op over mixed files (CoW rewrite reads via the scan)
+    // row-level op over the files (CoW rewrite reads via the scan)
     spark.sql(s"UPDATE $t SET s = 'hit' WHERE k IN (50, 150, 250)")
     assert(spark.table(t).where("s = 'hit'").count() == 3)
     assert(spark.table(t).count() == 300)
     spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("the row reader serves INT64 decimals written by earlier writers") {
+    // files already on disk may hold DECIMAL(<=9) as INT64 (the earlier
+    // Group writer's encoding, vs the native writer's INT32): the row
+    // reader dispatches on the file's own primitive type
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+    val schema = Types.buildMessage()
+      .addField(Types.optional(INT64)
+        .as(LogicalTypeAnnotation.decimalType(2, 7)).named("small"))
+      .named("graft_lake_file")
+    val dir = java.nio.file.Files.createTempDirectory("graft_int64dec_")
+    val path = dir.resolve("f.parquet").toString
+    val w = ExampleParquetWriter.builder(
+        new org.apache.hadoop.fs.Path(path))
+      .withConf(new org.apache.hadoop.conf.Configuration())
+      .withType(schema).build()
+    val f = new SimpleGroupFactory(schema)
+    try Seq(12345L, -7L).foreach(v => w.write(f.newGroup().append("small", v)))
+    finally w.close()
+    val got = graft.sources.GraftParquetIO.read(path,
+      Seq(org.apache.spark.sql.types.DecimalType(7, 2)))
+      .map(_.getDecimal(0, 7, 2).toJavaBigDecimal)
+    assert(got == Vector(new java.math.BigDecimal("123.45"),
+      new java.math.BigDecimal("-0.07")), got.toString)
+    graft.sources.GraftParquetIO.deleteRecursively(dir.toFile)
   }
 
   test("keyed (SPJ) scans of partition-pure parquet files decode columnar") {
@@ -361,7 +373,7 @@ class ColumnarScanSpec extends SparkTestBase {
     val t = "graftlake.spec_colscan_keyed"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, p BIGINT, s STRING) " +
-      "PARTITIONED BY (p) TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "PARTITIONED BY (p)")
     for (b <- 0 until 2)
       spark.range(b * 40L, (b + 1) * 40L)
         .selectExpr("id AS k", "id % 4 AS p", "concat('v', id) AS s")

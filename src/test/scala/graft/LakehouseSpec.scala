@@ -254,7 +254,8 @@ class LakehouseSpec extends SparkTestBase {
     val staleWrite = opA.newWriteBuilder(writeInfo(spark.table(t).schema))
       .build().toBatch
     val ex = intercept[IllegalStateException] {
-      staleWrite.commit(Array(graft.sources.GraftLakeCommit(Vector.empty)))
+      staleWrite.commit(Array(
+        graft.sources.GraftLakeFilesCommit(Vector.empty)))
     }
     assert(ex.getMessage.contains("write conflict"))
     assert(spark.table(t).where("s = 'B'").count() == 1,
@@ -278,7 +279,7 @@ class LakehouseSpec extends SparkTestBase {
       .build().toBatch
     val exM = intercept[IllegalStateException] {
       staleDelta.commit(Array(graft.sources.GraftLakeDeltaCommit(
-        Vector((f1, 1L)), Vector.empty)))
+        Vector((f1, 1L)))))
     }
     assert(exM.getMessage.contains("write conflict"))
     assert(spark.table(tm).count() == 9, "compacted state intact")
@@ -411,8 +412,8 @@ class LakehouseSpec extends SparkTestBase {
         Expressions.literal(UTF8String.fromString(id)))).toArray[
         org.apache.spark.sql.connector.expressions.Expression]))
     val snap = GraftLakeSnapshot(
-      Vector(GraftLakeFile("t#f1", Vector.empty, Seq(0)),
-        GraftLakeFile("t#f2", Vector.empty, Seq(0))), Map.empty)
+      Vector(GraftLakeFile("t#f1", Seq(0), ""),
+        GraftLakeFile("t#f2", Seq(0), "")), Map.empty)
     def scanWith(current: Set[String]) = new GraftLakeScan(snap, schema,
       schema, Nil, Some(new GroupScanState(Set("t#f1", "t#f2"))),
       () => current, Map(0 -> "k"))
@@ -920,19 +921,45 @@ class LakehouseSpec extends SparkTestBase {
     }
   }
 
-  test("parquet storage mode: row-level registry queries are mode-identical") {
-    // VERDICT r11 task 3: with graft.storage=parquet the same fixtures
-    // run over REAL parquet file groups; memory mode is oracle-green, so
-    // row-for-row equality proves parquet mode is too
-    def collected(n: String) = run(n).collect().toSeq
-    val names =
-      Seq("ref_merge_into_sql", "ref_merge_on_read", "ref_change_feed")
-    val mem = names.map(n => n -> collected(n)).toMap
-    sys.props("graft.lake.storage") = "parquet"
-    try names.foreach { n =>
-      assert(collected(n) == mem(n),
-        s"$n must produce the identical relation in parquet storage")
-    } finally sys.props -= "graft.lake.storage"
+  test("lake tables ship no rows in task closures: every table is parquet on disk") {
+    // a table created with NO storage property: its rows live in parquet
+    // files under the table root, and the scan's input partitions carry
+    // paths and manifests only — their serialized size is a small fixed
+    // bound, independent of how many rows the files hold
+    spark.conf.set("spark.sql.catalog.graftlake",
+      classOf[graft.sources.GraftLakeCatalog].getName)
+    val t = "graftlake.spec_no_closure_rows"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
+    spark.range(0, 100000)
+      .selectExpr("id AS k", "concat('payload-', id) AS s")
+      .coalesce(2).writeTo(t).append()
+    val table = graft.sources.GraftLakeCatalog
+      .tableFor("graftlake", "spec_no_closure_rows").get
+    val files = table.filePaths.values.map(new java.io.File(_)).toSeq
+    assert(files.nonEmpty && files.forall(f => f.isFile &&
+      f.getName.endsWith(".parquet") && f.length() > 0),
+      s"the data must exist as parquet files: $files")
+    val root = files.head.getParentFile
+    assert(files.forall(_.getParentFile == root) &&
+      new java.io.File(root, "_graft_log").isDirectory,
+      s"the files live under the table root next to its log: $root")
+    val parts = table.newScanBuilder(
+        org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+      .build().toBatch.planInputPartitions()
+    val ser = new org.apache.spark.serializer.JavaSerializer(
+      spark.sparkContext.getConf).newInstance()
+    val sizes = parts.toSeq.map(p => ser.serialize(p).limit())
+    assert(parts.nonEmpty && sizes.forall(_ < 4096),
+      s"100k rows must not ride inside the input partitions: $sizes bytes")
+    assert(spark.table(t).count() == 100000L)
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    assert(!root.exists(), "DROP deletes the table's files")
+    // the removed storage switch fails loudly instead of being ignored
+    val e = intercept[Exception](spark.sql(s"CREATE TABLE $t (k BIGINT) " +
+      "TBLPROPERTIES ('graft.storage' = 'parquet')"))
+    assert(Option(e.getMessage).exists(
+      _.contains("memory-backed lake storage was removed")), s"$e")
   }
 
   test("parquet storage: write amplification is measured bytes (CoW one file, MoR ~zero)") {
@@ -943,8 +970,7 @@ class LakehouseSpec extends SparkTestBase {
       val t = s"graftlake.spec_pq_$tag"
       spark.sql(s"DROP TABLE IF EXISTS $t")
       spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-        s"TBLPROPERTIES ('graft.mode' = '$mode', " +
-        "'graft.storage' = 'parquet')")
+        s"TBLPROPERTIES ('graft.mode' = '$mode')")
       for (b <- 0 until 4)
         spark.range(b * 1000L, (b + 1) * 1000L)
           .selectExpr("id AS k", "repeat('x', 32) AS s")
@@ -1003,7 +1029,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_pq_evolve"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, p BIGINT, s STRING) " +
-      "PARTITIONED BY (p) TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "PARTITIONED BY (p)")
     spark.range(0, 20).selectExpr("id AS k", "id % 2 AS p",
       "concat('v', id) AS s").coalesce(1).writeTo(t).append()
     spark.sql(s"ALTER TABLE $t ADD COLUMNS (w DOUBLE)")
@@ -1047,8 +1073,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_pq_expire"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.mode' = 'merge-on-read', " +
-      "'graft.storage' = 'parquet')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 10).selectExpr("id AS k", "'a' AS s")
       .coalesce(1).writeTo(t).append() // v1: f1
     val table = graft.sources.GraftLakeCatalog
@@ -1147,8 +1172,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_agg_push"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     for (b <- 0 until 3)
       spark.range(b * 100L, (b + 1) * 100L)
         .selectExpr("id AS k", "concat('s', id) AS s")
@@ -1212,8 +1236,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_agg_eqd"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING, b BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING, b BIGINT)")
     for (b <- 0 until 3)
       spark.range(b * 100L, (b + 1) * 100L)
         .selectExpr("id AS k", "concat('s', id) AS s", s"$b AS b")
@@ -1413,8 +1436,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_agg_group"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, st STRING, v DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, st STRING, v DOUBLE)")
     // a partition-keyed writer lands one single-valued file per key —
     // exactly the layout Iceberg answers per-partition aggregates on
     for ((st, b) <- Seq("A", "B", "C").zipWithIndex)
@@ -1809,12 +1831,11 @@ class LakehouseSpec extends SparkTestBase {
         "cluster rewrite")
     spark.sql(s"DROP TABLE IF EXISTS $t")
 
-    // parquet storage mode: the rewrite lands REAL files and the
-    // relation survives byte-identical
+    // the rewrite lands REAL files and the relation survives
+    // byte-identical
     val tp = "graftlake.spec_cluster_pq"
     spark.sql(s"DROP TABLE IF EXISTS $tp")
-    spark.sql(s"CREATE TABLE $tp (k BIGINT, v STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $tp (k BIGINT, v STRING)")
     for (b <- 0 until 3)
       spark.range(0, 50).selectExpr(s"id * 3 + $b AS k",
         s"concat('v', id * 3 + $b) AS v")
@@ -1822,9 +1843,9 @@ class LakehouseSpec extends SparkTestBase {
     val beforePq = spark.table(tp).collect().map(_.toString).sorted.toSeq
     spark.sql(s"CALL graftlake.system.cluster('spec_cluster_pq', 'k', 3)")
     assert(spark.table(tp).collect().map(_.toString).sorted.toSeq
-      == beforePq, "parquet-mode clustering must not change the relation")
+      == beforePq, "clustering must not change the relation")
     assert(parts(spark.table(tp).where("k < 50")) == 1,
-      "parquet-mode stripes must prune like memory-mode ones")
+      "clustered stripes must prune to one file")
     spark.sql(s"DROP TABLE IF EXISTS $tp")
   }
 
@@ -1833,8 +1854,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_agg_where"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, st STRING, v DOUBLE) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, st STRING, v DOUBLE)")
     for ((st, b) <- Seq("A", "B", "C").zipWithIndex)
       spark.range(b * 100L, (b + 1) * 100L)
         .selectExpr("id AS k", s"'$st' AS st", "CAST(id AS DOUBLE) AS v")
@@ -1917,9 +1937,7 @@ class LakehouseSpec extends SparkTestBase {
         "WHEN NOT MATCHED THEN INSERT (k, emb, tags) " +
         "VALUES (b.k, b.emb, b.tags)")
     }
-    build("graftlake.spec_arr_mem", "")
-    build("graftlake.spec_arr_pq",
-      " TBLPROPERTIES ('graft.storage' = 'parquet')")
+    build("graftlake.spec_arr_pq", "")
     val table = graft.sources.GraftLakeCatalog
       .tableFor("graftlake", "spec_arr_pq").get
     assert(table.filePaths.nonEmpty && table.filePaths.values.forall(p =>
@@ -1929,10 +1947,7 @@ class LakehouseSpec extends SparkTestBase {
       .map(r => (r.getLong(0),
         Option(r.getSeq[Float](1)).map(_.toList),
         Option(r.getSeq[String](2)).map(_.toList))).toSeq
-    val mem = rows("graftlake.spec_arr_mem")
     val pq = rows("graftlake.spec_arr_pq")
-    assert(mem == pq,
-      "parquet-backed arrays must be row-identical to memory storage")
     assert(pq.length == 101 && pq.exists(_._1 == 999L))
     assert(pq.find(_._1 == 3L).get._2.contains(List(9.0f)))
     assert(pq.find(_._1 == 11L).get._3.contains(List("t11", null)),
@@ -1940,8 +1955,7 @@ class LakehouseSpec extends SparkTestBase {
     assert(pq.find(_._1 == 5L).get._3.contains(Nil),
       "an EMPTY array stays distinct from a NULL column")
     assert(pq.find(_._1 == 7L).get._2.isEmpty, "null arrays stay null")
-    Seq("graftlake.spec_arr_mem", "graftlake.spec_arr_pq")
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
+    spark.sql("DROP TABLE IF EXISTS graftlake.spec_arr_pq")
   }
 
   test("ADD COLUMN DEFAULT back-fills old files; INT widens to BIGINT in place") {
@@ -1991,8 +2005,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_vacuum_pin"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.mode' = 'merge-on-read', " +
-      "'graft.storage' = 'parquet')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 100).selectExpr("id AS k", "'a' AS s")
       .coalesce(1).writeTo(t).append()
     val table = graft.sources.GraftLakeCatalog
@@ -2027,8 +2040,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_stale_pin"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.mode' = 'merge-on-read', " +
-      "'graft.storage' = 'parquet')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 50).selectExpr("id AS k", "'a' AS s")
       .coalesce(1).writeTo(t).append()
     val table = graft.sources.GraftLakeCatalog
@@ -2545,8 +2557,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql(s"CREATE TABLE $t (k BIGINT, " +
       "span STRUCT<s: INT, e: INT, label: STRING>, " +
       "toks ARRAY<STRUCT<t: STRING, p: DOUBLE>>, " +
-      "scores MAP<STRING, DOUBLE>) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "scores MAP<STRING, DOUBLE>)")
     spark.sql(s"""INSERT INTO $t VALUES
       (1, named_struct('s', 0, 'e', 5, 'label', 'A'),
         array(named_struct('t', 'hi', 'p', 0.9D),
@@ -2580,8 +2591,7 @@ class LakehouseSpec extends SparkTestBase {
     // arbitrarily deep nesting is accepted; BINARY leaves are not (yet)
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql("CREATE TABLE graftlake.spec_nested_deep " +
-      "(k BIGINT, deep ARRAY<MAP<STRING, ARRAY<STRUCT<a: INT>>>>) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "(k BIGINT, deep ARRAY<MAP<STRING, ARRAY<STRUCT<a: INT>>>>)")
     spark.sql("INSERT INTO graftlake.spec_nested_deep VALUES " +
       "(1, array(map('x', array(named_struct('a', 7)))))")
     assert(spark.sql("SELECT deep[0]['x'][0].a " +
@@ -2589,8 +2599,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql("DROP TABLE IF EXISTS graftlake.spec_nested_deep")
     intercept[Exception] {
       spark.sql("CREATE TABLE graftlake.spec_nested_bad " +
-        "(k BIGINT, b STRUCT<x: BINARY>) " +
-        "TBLPROPERTIES ('graft.storage' = 'parquet')")
+        "(k BIGINT, b STRUCT<x: BINARY>)")
     }
   }
 
@@ -2857,8 +2866,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_wap_pq"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT)")
     spark.range(0, 10).selectExpr("id AS k").coalesce(1)
       .writeTo(t).append()
     spark.sql(s"CALL graftlake.system.create_branch('spec_wap_pq', 'b')")
@@ -2889,8 +2897,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_taskwrite"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     val table = graft.sources.GraftLakeCatalog
       .tableFor("graftlake", "spec_taskwrite").get
     val winfo = new LogicalWriteInfo {
@@ -2975,8 +2982,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_dcluster"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (x BIGINT, y BIGINT, v STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (x BIGINT, y BIGINT, v STRING)")
     for (s <- 0 until 4) // row-major slabs: every file spans all of y
       spark.range(s * 1024, (s + 1) * 1024)
         .selectExpr("id DIV 64 AS x", "id % 64 AS y",
@@ -3058,6 +3064,23 @@ class LakehouseSpec extends SparkTestBase {
       s"CALL graftlake.system.cluster('spec_dcluster', 'x', 2)").head()
     assert(res2.getInt(1) == 2)
     assert(spark.table(t).count() == before.length)
+    // (4) a sort spread over several partitions (AQE off keeps the range
+    // shuffle's 4 partitions; a small table's sort otherwise coalesces to
+    // one) takes the global-index chunking path: stripes stay exact
+    val aqe = spark.conf.getOption("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val res4 = spark.sql(
+        s"CALL graftlake.system.cluster('spec_dcluster', 'x', 4)").head()
+      assert(res4.getInt(1) == 4)
+      assert(parts("x >= 16 AND x < 32") == 1,
+        "multi-partition sort: a quarter-range predicate plans ONE stripe")
+    } finally aqe match {
+      case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
+      case None => spark.conf.unset("spark.sql.adaptive.enabled")
+    }
+    assert(spark.table(t).collect().map(_.toString).sorted.toSeq == before,
+      "the multi-partition rewrite must not change the relation")
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
@@ -3081,8 +3104,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING, " +
       "CONSTRAINT k_pos CHECK (k > 0)) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.sql(s"INSERT INTO $t VALUES (5, 'a'), (6, 'b')")
     def state(): Seq[String] =
       spark.table(t).orderBy("k").collect().map(_.toString).toSeq
@@ -3139,8 +3161,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (amount BIGINT, s STRING, " +
       "CONSTRAINT amount_pos CHECK (amount > 0)) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.sql(s"INSERT INTO $t VALUES (5, 'a'), (6, 'b')")
     spark.sql(s"ALTER TABLE $t RENAME COLUMN amount TO price")
     val table = graft.sources.GraftLakeCatalog
@@ -3172,8 +3193,7 @@ class LakehouseSpec extends SparkTestBase {
     val t2 = "graftck.spec_ck_widen"
     spark.sql(s"DROP TABLE IF EXISTS $t2")
     spark.sql(s"CREATE TABLE $t2 (v INT, " +
-      "CONSTRAINT v_pos CHECK (v > 0)) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "CONSTRAINT v_pos CHECK (v > 0))")
     spark.sql(s"INSERT INTO $t2 VALUES (1)")
     spark.sql(s"ALTER TABLE $t2 ALTER COLUMN v TYPE BIGINT")
     spark.sql(s"INSERT INTO $t2 VALUES (6000000000)") // needs BIGINT
@@ -3209,8 +3229,7 @@ class LakehouseSpec extends SparkTestBase {
     val t3 = "graftck.spec_ck_nested"
     spark.sql(s"DROP TABLE IF EXISTS $t3")
     spark.sql(s"CREATE TABLE $t3 (k BIGINT, s STRUCT<leaf: BIGINT>, " +
-      "CONSTRAINT leaf_pos CHECK (s.leaf > 0)) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "CONSTRAINT leaf_pos CHECK (s.leaf > 0))")
     spark.sql(s"INSERT INTO $t3 VALUES (1, named_struct('leaf', 5L))")
     intercept[Exception](
       spark.sql(s"INSERT INTO $t3 VALUES (2, named_struct('leaf', -1L))"))
@@ -3249,8 +3268,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t4")
     spark.sql(s"CREATE TABLE $t4 (x BIGINT, z BIGINT, " +
       "arr ARRAY<BIGINT>, " +
-      "CONSTRAINT has_pos CHECK (exists(arr, x -> x > 0))) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "CONSTRAINT has_pos CHECK (exists(arr, x -> x > 0)))")
     spark.sql(s"INSERT INTO $t4 VALUES (1, 1, array(-1L, 5L))")
     intercept[Exception](
       spark.sql(s"INSERT INTO $t4 VALUES (2, 2, array(-1L, -2L))"))
@@ -3310,8 +3328,7 @@ class LakehouseSpec extends SparkTestBase {
       val t = s"graftck.spec_ck_race_$tag"
       spark.sql(s"DROP TABLE IF EXISTS $t")
       spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-        "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-        s"'graft.mode' = '$mode')")
+        s"TBLPROPERTIES ('graft.mode' = '$mode')")
       spark.range(0, 10).selectExpr("id AS k", "'v' AS s")
         .coalesce(1).writeTo(t).append()
       val table = graft.sources.GraftLakeCatalog
@@ -3353,8 +3370,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING, " +
       "CONSTRAINT k_cap CHECK (k < 100)) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 10).selectExpr("id AS k", "'v' AS s")
       .coalesce(1).writeTo(t).append()
     val table = graft.sources.GraftLakeCatalog
@@ -3394,8 +3410,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftck.spec_ck_persist"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (amount BIGINT, " +
-      "CONSTRAINT pos_chk CHECK (amount > 0)) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "CONSTRAINT pos_chk CHECK (amount > 0))")
     spark.sql(s"INSERT INTO $t VALUES (5)")
     val table = graft.sources.GraftLakeCatalog
       .tableFor("graftck", "spec_ck_persist").get
@@ -3436,8 +3451,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftck.spec_eq_race"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 20).selectExpr("id AS k", "concat('old', id) AS s")
       .coalesce(1).writeTo(t).append()
     val table = graft.sources.GraftLakeCatalog
@@ -3485,7 +3499,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, cat STRING) " +
       "PARTITIONED BY (cat) TBLPROPERTIES " +
-      "('graft.storage' = 'parquet', 'graft.mode' = 'merge-on-read')")
+      "('graft.mode' = 'merge-on-read')")
     spark.range(0, 100)
       .selectExpr("id AS k", "IF(id % 2 = 0, 'a', 'b') AS cat")
       .writeTo(t).append()
@@ -3507,8 +3521,7 @@ class LakehouseSpec extends SparkTestBase {
     // an UNPARTITIONED table aggregates under the NULL partition
     val tu = "graftlake.spec_parts_meta_u"
     spark.sql(s"DROP TABLE IF EXISTS $tu")
-    spark.sql(s"CREATE TABLE $tu (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $tu (k BIGINT)")
     spark.range(0, 30).selectExpr("id AS k").coalesce(1)
       .writeTo(tu).append()
     val u = spark.table(s"$tu.partitions").collect()
@@ -3558,8 +3571,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_meta_delete"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     for (b <- 0 until 4) // disjoint ranges: each file decides any k-cut
       spark.range(b * 100L, (b + 1) * 100L)
         .selectExpr("id AS k", "concat('v', id) AS s")
@@ -3625,8 +3637,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_maint_rebase"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     for (b <- 0 until 3)
       spark.range(b * 100L, (b + 1) * 100L)
         .selectExpr("id AS k", "concat('v', id) AS s")
@@ -3701,7 +3712,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, cat STRING, v STRING) " +
       "PARTITIONED BY (cat) TBLPROPERTIES " +
-      "('graft.storage' = 'parquet', 'graft.mode' = 'merge-on-read')")
+      "('graft.mode' = 'merge-on-read')")
     // 12 fragment appends per category — 24 tiny partition-pure files
     for (i <- 0 until 12; c <- Seq("a", "b"))
       spark.sql(s"INSERT INTO $t VALUES (${i * 2 +
@@ -3765,8 +3776,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_binpack_eqd"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     for (b <- 0 until 3)
       spark.range(b * 100L, (b + 1) * 100L)
         .selectExpr("id AS k", "concat('old', id) AS s")
@@ -3833,8 +3843,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_evolve"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, cat STRING, v DOUBLE) " +
-      "PARTITIONED BY (cat) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "PARTITIONED BY (cat)")
     spark.range(0, 100)
       .selectExpr("id AS k", "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' " +
         "END AS cat", "CAST(id AS DOUBLE) AS v")
@@ -3918,8 +3927,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_taskdelta"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.sql(s"INSERT INTO $t VALUES (1, 'a'), (2, 'b')")
     val table = graft.sources.GraftLakeCatalog
       .tableFor("graftlake", "spec_taskdelta").get
@@ -3929,11 +3937,11 @@ class LakehouseSpec extends SparkTestBase {
       Seq("k", "s"), Seq(LongType, StringType), Seq(0, 1), Nil)
     val w = new graft.sources.GraftLakeDeltaWriterFactory(
       Array[org.apache.spark.sql.types.DataType](LongType, StringType),
-      Some(fw)).createWriter(0, 0)
+      fw).createWriter(0, 0)
     w.insert(new GenericInternalRow(
       Array[Any](9L, UTF8String.fromString("z"))))
     val m = w.commit().asInstanceOf[graft.sources.GraftLakeDeltaCommit]
-    assert(m.inserted.isEmpty && m.insertedFiles.length == 1,
+    assert(m.insertedFiles.length == 1,
       "insert rows left the task as a FILE, not as driver-bound rows")
     assert(m.insertedFiles.head.nRows == 1 &&
       m.insertedFiles.head.stats.nonEmpty,
@@ -3963,8 +3971,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_psink"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, cat STRING) " +
-      "PARTITIONED BY (cat) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+      "PARTITIONED BY (cat)")
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_psink_").toFile
     val land = new java.io.File(tmp, "land")
@@ -4025,8 +4032,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_cdf_paths"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 50).selectExpr("id AS k", "concat('v', id) AS s")
       .coalesce(1).writeTo(t).append()
     spark.sql(s"DELETE FROM $t WHERE k % 10 = 0") // DV-growth delete leg
@@ -4044,8 +4050,8 @@ class LakehouseSpec extends SparkTestBase {
       case c: graft.sources.GraftLakeChangePartition => c }
     assert(cps.length == 2, s"insert leg + DV-growth delete leg: ${
       cps.map(c => (c.changeType, c.version)).toSeq}")
-    cps.foreach(c => assert(c.path.isDefined && c.rows.isEmpty,
-      s"${c.changeType} leg must ship a path, not rows"))
+    cps.foreach(c => assert(new java.io.File(c.path).isFile,
+      s"${c.changeType} leg must ship the data file's path"))
     // ... and the feed still renders exactly the right rows
     val feed = spark.read.option("graft.changes.from", "0").table(s"$t.changes")
       .groupBy("_change_type").count().collect()
@@ -4070,7 +4076,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftfan.spec_fanout"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k BIGINT, p BIGINT, s STRING) " +
-      "PARTITIONED BY (p) TBLPROPERTIES ('graft.storage' = 'parquet', " +
+      "PARTITIONED BY (p) TBLPROPERTIES (" +
       "'graft.mode' = 'merge-on-read')")
     // two appends, each one task batch spanning 3 keys → 6 pure files
     for (b <- 0 until 2)
@@ -4180,8 +4186,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.conf.set("spark.sql.catalog.graftblm.warehouse", wh)
     val t = "graftblm.spec_bloom_dur"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT)")
     for (b <- 0 until 4)
       spark.range(0, 500).selectExpr(s"id * 4 + $b AS k")
         .coalesce(1).writeTo(t).append()
@@ -4263,8 +4268,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.conf.set("spark.sql.catalog.grafteqd.warehouse", wh)
     val t = "grafteqd.spec_eqd"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     spark.range(0, 300).selectExpr("id AS k", "concat('old', id) AS s")
       .coalesce(2).writeTo(t).append()
     def table() = graft.sources.GraftLakeCatalog
@@ -4437,8 +4441,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftlake.spec_eqd_dup"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     spark.range(0, 10).selectExpr("id AS k", "concat('old', id) AS s")
       .coalesce(1).writeTo(t).append()
     def table() = graft.sources.GraftLakeCatalog
@@ -4488,8 +4491,7 @@ class LakehouseSpec extends SparkTestBase {
     val t = "graftlake.spec_eqd_col"
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"CREATE TABLE $t (k INT, s STRING, v BIGINT) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet', " +
-      "'graft.mode' = 'merge-on-read')")
+      "TBLPROPERTIES ('graft.mode' = 'merge-on-read')")
     spark.range(0, 100)
       .selectExpr("cast(id AS int) AS k", "concat('old', id) AS s",
         "id * 10 AS v")
@@ -4590,8 +4592,7 @@ class LakehouseSpec extends SparkTestBase {
     spark.conf.set("spark.sql.catalog.graftarb.warehouse", wh)
     val t = "graftarb.spec_arbiter"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     spark.range(0, 10).selectExpr("id AS k", "'a' AS s")
       .coalesce(1).writeTo(t).append()
     val table = graft.sources.GraftLakeCatalog
@@ -4735,8 +4736,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftpc.spec_probe_cache"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     for (b <- 0 until 3)
       spark.range(b * 100L, (b + 1) * 100L)
         .selectExpr("id AS k", "concat('old', id) AS s")
@@ -4792,8 +4792,7 @@ class LakehouseSpec extends SparkTestBase {
       classOf[graft.sources.GraftLakeCatalog].getName)
     val t = "graftrc.spec_count_race"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
-      "TBLPROPERTIES ('graft.storage' = 'parquet')")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING)")
     spark.range(0, 100).selectExpr("id AS k", "concat('old', id) AS s")
       .coalesce(1).writeTo(t).append()
     def table() = graft.sources.GraftLakeCatalog

@@ -224,14 +224,29 @@ object PropertySpec extends Properties("graft.kernels") {
       Array[Any](i.toLong))
       : org.apache.spark.sql.catalyst.InternalRow)
 
+  /** `lakeRows(n)` as a real one-column (`k BIGINT`) parquet file; `body`
+    * gets its path, and the file is deleted afterwards. */
+  private def withLakeFile[T](n: Int)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_prop_").toFile
+    try {
+      val path = new java.io.File(dir, "f.parquet").getAbsolutePath
+      graft.sources.GraftParquetIO.write(path, Seq("k"),
+        Seq(org.apache.spark.sql.types.LongType), lakeRows(n))
+      body(path)
+    } finally graft.sources.GraftParquetIO.deleteRecursively(dir)
+  }
+
   property("DV filter keeps exactly the non-deleted rows, in order") =
     Prop.forAll(rowsAndDeletes) { case (n, dead) =>
       import graft.sources.{GraftLakeFile, GraftLakeSnapshot}
-      val rows = lakeRows(n)
-      val f = GraftLakeFile("f", rows, Seq(0))
-      val live = GraftLakeSnapshot(Vector(f),
-        Map("f" -> dead.map(_.toLong))).liveRows(f)
-      live == (0 until n).filterNot(dead).map(rows)
+      withLakeFile(n) { path =>
+        val f = GraftLakeFile("f", Seq(0), path,
+          types = Seq(org.apache.spark.sql.types.LongType), numRows = n)
+        val live = GraftLakeSnapshot(Vector(f),
+          Map("f" -> dead.map(_.toLong))).liveRows(f)
+        // lakeRows(n) holds k = position
+        live.map(_.getLong(0)) == (0 until n).filterNot(dead).map(_.toLong)
+      }
     }
 
   // ---- parquet-backed lake storage round trip -----------------------------
@@ -419,7 +434,8 @@ object PropertySpec extends Properties("graft.kernels") {
         Array[Any](v.map(Long.box).orNull)): InternalRow).toVector
       val stats = graft.sources.GraftLakeStats.collect(
         rows, Seq(7), Seq(LongType))
-      val f = graft.sources.GraftLakeFile("f", rows, Seq(7), stats = stats)
+      val f = graft.sources.GraftLakeFile("f", Seq(7), "",
+        numRows = rows.length, stats = stats)
       val pred = new Predicate(op, Array(
         Expressions.column("k"), Expressions.literal(lit)))
       val may = graft.sources.GraftLakeStats.mayMatch(
@@ -467,7 +483,8 @@ object PropertySpec extends Properties("graft.kernels") {
         .toVector
       val (nstats, nnulls) = graft.sources.GraftLakeStats.collectNested(
         rows, Seq(7), Seq(stT))
-      val f = graft.sources.GraftLakeFile("f", rows, Seq(7),
+      val f = graft.sources.GraftLakeFile("f", Seq(7), "",
+        numRows = rows.length,
         types = Seq(stT), nstats = nstats, nnulls = nnulls)
       val ref = Expressions.column("s.leaf")
       val pred =
@@ -523,7 +540,8 @@ object PropertySpec extends Properties("graft.kernels") {
       val stats = graft.sources.GraftLakeStats.collect(
         rows, Seq(7), Seq(DoubleType))
       val nulls = graft.sources.GraftLakeStats.nullCounts(rows, Seq(7))
-      val f = graft.sources.GraftLakeFile("f", rows, Seq(7),
+      val f = graft.sources.GraftLakeFile("f", Seq(7), "",
+        numRows = rows.length,
         stats = stats, nulls = nulls)
       val colRef = Expressions.column("k")
       val pred = op match {
@@ -593,7 +611,8 @@ object PropertySpec extends Properties("graft.kernels") {
       val stats = graft.sources.GraftLakeStats.collect(
         rows, Seq(3), Seq(StringType))
       val nulls = graft.sources.GraftLakeStats.nullCounts(rows, Seq(3))
-      val f = graft.sources.GraftLakeFile("f", rows, Seq(3),
+      val f = graft.sources.GraftLakeFile("f", Seq(3), "",
+        numRows = rows.length,
         stats = stats, nulls = nulls)
       val colRef = Expressions.column("s")
       val pred = op match {
@@ -726,7 +745,8 @@ object PropertySpec extends Properties("graft.kernels") {
       // added later with (or without) a declared default
       val rows = Vector.fill(n)(new GenericInternalRow(
         Array[Any](0L)): InternalRow)
-      val f = graft.sources.GraftLakeFile("f", rows, Seq(1))
+      val f = graft.sources.GraftLakeFile("f", Seq(1), "",
+        numRows = rows.length)
       val defaults: Map[Int, Any] =
         dflt.map(d => Map(3 -> (UTF8String.fromString(d): Any)))
           .getOrElse(Map.empty)
@@ -769,17 +789,19 @@ object PropertySpec extends Properties("graft.kernels") {
       val full = StructType(Seq(StructField("k", LongType)))
       val req = StructType(
         Seq(StructField("k", LongType), StructField("_pos", LongType)))
-      val reader = new GraftLakeReaderFactory(full, req)
-        .createReader(
-          GraftLakeFilePartition("f", lakeRows(n),
-            dead.map(_.toLong).toArray.sorted, Seq("k")))
-      val got = List.newBuilder[(Long, Long)]
-      while (reader.next()) {
-        val r = reader.get()
-        got += ((r.getLong(0), r.getLong(1)))
+      withLakeFile(n) { path =>
+        val reader = new GraftLakeReaderFactory(full, req)
+          .createReader(
+            GraftLakeFilePartition("f", dead.map(_.toLong).toArray.sorted,
+              Seq("k"), path, Seq(LongType)))
+        val got = List.newBuilder[(Long, Long)]
+        while (reader.next()) {
+          val r = reader.get()
+          got += ((r.getLong(0), r.getLong(1)))
+        }
+        got.result() ==
+          (0 until n).filterNot(dead).map(i => (i.toLong, i.toLong)).toList
       }
-      got.result() ==
-        (0 until n).filterNot(dead).map(i => (i.toLong, i.toLong)).toList
     }
 
   // ---- bloom file-skipping: false negatives are wrong answers -------------
@@ -806,7 +828,8 @@ object PropertySpec extends Properties("graft.kernels") {
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           Array[Any](v))
           : org.apache.spark.sql.catalyst.InternalRow).toVector
-      val f = GraftLakeFile("f", rows, Seq(0), types = Seq(LongType),
+      val f = GraftLakeFile("f", Seq(0), "",
+        numRows = rows.length, types = Seq(LongType),
         stats = GraftLakeStats.collect(rows, Seq(0), Seq(LongType)),
         nulls = Map(0 -> 0L),
         blooms = GraftLakeStats.bloomCollect(rows, Seq(0), Seq(LongType)))
@@ -822,7 +845,8 @@ object PropertySpec extends Properties("graft.kernels") {
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           Array[Any](UTF8String.fromString(v)))
           : org.apache.spark.sql.catalyst.InternalRow).toVector
-      val f = GraftLakeFile("f", rows, Seq(0), types = Seq(StringType),
+      val f = GraftLakeFile("f", Seq(0), "",
+        numRows = rows.length, types = Seq(StringType),
         stats = GraftLakeStats.collect(rows, Seq(0), Seq(StringType)),
         nulls = Map(0 -> 0L),
         blooms = GraftLakeStats.bloomCollect(rows, Seq(0), Seq(StringType)))
@@ -840,7 +864,8 @@ object PropertySpec extends Properties("graft.kernels") {
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
           Array[Any](v))
           : org.apache.spark.sql.catalyst.InternalRow).toVector
-      val f = GraftLakeFile("f", rows, Seq(0), types = Seq(IntegerType),
+      val f = GraftLakeFile("f", Seq(0), "",
+        numRows = rows.length, types = Seq(IntegerType),
         stats = GraftLakeStats.collect(rows, Seq(0), Seq(IntegerType)),
         nulls = Map(0 -> 0L),
         blooms = GraftLakeStats.bloomCollect(rows, Seq(0), Seq(IntegerType)))
