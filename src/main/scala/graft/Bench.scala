@@ -8,12 +8,16 @@ object Bench {
     // dev-only: bench a name-filtered subset (substring match, comma-sep)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     // NOTE: do NOT set a fixed spark.sql.streaming.checkpointLocation here.
-    // A/B'd (tmpfs vs /tmp, ABAB over the 5 heaviest streaming queries):
-    // 40.7/42.3 s vs 39.6 s — checkpoint I/O is ~3% of the streaming cost,
-    // i.e. noise — AND a persistent base is a footgun: query names restart
-    // per JVM, so a re-run resumes the PREVIOUS run's committed checkpoint
-    // and silently processes zero rows (observed: 5 queries "ran" in
-    // 1.16 s total). Per-query temp checkpoints stay.
+    // A persistent base is a footgun: query names restart per JVM, so a
+    // re-run resumes the PREVIOUS run's committed checkpoint and silently
+    // processes zero rows (observed: 5 queries "ran" in 1.16 s total).
+    // Per-query temp checkpoints stay. An old tmpfs-vs-/tmp A/B here
+    // (40.7/42.3 s vs 39.6 s) called checkpoint I/O "~3%, noise": both legs
+    // wrote through Hadoop's local filesystem, which forks a chmod/readlink
+    // process per file create and rename, so the A/B compared disks and
+    // never saw that per-file cost (31-52 ms, ~3.1 s of the stream_drain
+    // slice's 14.3 s of trigger time). Checkpoints now go through
+    // graft.streaming.GraftCheckpointFileManager (java.nio, no forks).
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

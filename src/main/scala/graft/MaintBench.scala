@@ -98,15 +98,17 @@ object MaintBench {
           .selectExpr("o_orderkey", "o_custkey", "o_orderstatus",
             "CAST(-1.0 AS DOUBLE) AS o_totalprice")
           .coalesce(1).write.mode("append").parquet(land.getAbsolutePath)
-        val q = spark.readStream.schema(spark.table(te).schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(land.getAbsolutePath)
-          .writeStream
-          .option("checkpointLocation", chk.getAbsolutePath)
-          .option("graft.upsert.key", "o_orderkey")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .toTable(te)
-        graft.streaming.StreamingOps.awaitDrained(q)
+        graft.streaming.StreamingOps.withStreamingConf(spark, None) {
+          val q = spark.readStream.schema(spark.table(te).schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(land.getAbsolutePath)
+            .writeStream
+            .option("checkpointLocation", chk.getAbsolutePath)
+            .option("graft.upsert.key", "o_orderkey")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .toTable(te)
+          graft.streaming.StreamingOps.awaitDrained(q)
+        }
       }
     }
     require(table().eqDeletes.size == 3, "three unresolved epochs")

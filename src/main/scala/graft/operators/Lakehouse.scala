@@ -12,6 +12,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.Query
 import graft.functions.Exact._
 import graft.sources.Tables
+import graft.streaming.StreamingOps
 
 /** Lakehouse table semantics over RAW parquet + a manifest — the two
   * capabilities a table format adds that plain directory scans cannot
@@ -1200,8 +1201,8 @@ object Lakehouse {
       "_pid" + ProcessHandle.current().pid()
     val chk = new File(tmp, s"graft_scdf_chk_$tag")
     val sink = new File(tmp, s"graft_scdf_sink_$tag")
-    Seq(chk, sink).foreach(graft.streaming.StreamingOps.deleteRecursively)
-    def drain(): Unit = {
+    Seq(chk, sink).foreach(StreamingOps.deleteRecursively)
+    def drain(): Unit = StreamingOps.withStreamingConf(spark, None) {
       val q = spark.readStream
         .option("graft.stream.startingVersion", "0")
         .table(s"$t.changes")
@@ -1213,7 +1214,7 @@ object Lakehouse {
         .option("checkpointLocation", chk.getAbsolutePath)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      graft.streaming.StreamingOps.awaitDrained(q)
+      StreamingOps.awaitDrained(q)
     }
     Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -1314,12 +1315,12 @@ object Lakehouse {
       "_pid" + ProcessHandle.current().pid()
     val land = new File(tmp, s"graft_ssink_land_$tag")
     val chk = new File(tmp, s"graft_ssink_chk_$tag")
-    Seq(land, chk).foreach(graft.streaming.StreamingOps.deleteRecursively)
+    Seq(land, chk).foreach(StreamingOps.deleteRecursively)
     val base = Tables(spark, sfDir, "events")
       .select(col("event_id"), col("event_type"), col("user_id"),
         col("value"))
     val schema = base.schema
-    def drain(): Unit = {
+    def drain(): Unit = StreamingOps.withStreamingConf(spark, None) {
       val q = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(land.getAbsolutePath)
@@ -1327,7 +1328,7 @@ object Lakehouse {
         .option("checkpointLocation", chk.getAbsolutePath)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .toTable(t)
-      graft.streaming.StreamingOps.awaitDrained(q)
+      StreamingOps.awaitDrained(q)
     }
     // wave 1: the corpus lands as 3 files -> 3 exactly-once epochs
     base.repartition(3).write.mode("append").parquet(land.getAbsolutePath)
@@ -1371,22 +1372,24 @@ object Lakehouse {
       "_pid" + ProcessHandle.current().pid()
     val land = new File(tmp, s"graft_eqd_land_$tag")
     val chk = new File(tmp, s"graft_eqd_chk_$tag")
-    Seq(land, chk).foreach(graft.streaming.StreamingOps.deleteRecursively)
+    Seq(land, chk).foreach(StreamingOps.deleteRecursively)
     // the upsert batch arrives as 3 landing files → 3 epochs, each
     // committing (data files + equality-delete keys file) atomically
     base.filter(col("o_orderkey") % 2 === 0)
       .withColumn("o_orderstatus", lit("U"))
       .repartition(3).write.mode("append").parquet(land.getAbsolutePath)
-    val q = spark.readStream
-      .schema(spark.table(t).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(land.getAbsolutePath)
-      .writeStream
-      .option("checkpointLocation", chk.getAbsolutePath)
-      .option("graft.upsert.key", "o_orderkey")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .toTable(t)
-    graft.streaming.StreamingOps.awaitDrained(q)
+    StreamingOps.withStreamingConf(spark, None) {
+      val q = spark.readStream
+        .schema(spark.table(t).schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(land.getAbsolutePath)
+        .writeStream
+        .option("checkpointLocation", chk.getAbsolutePath)
+        .option("graft.upsert.key", "o_orderkey")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .toTable(t)
+      StreamingOps.awaitDrained(q)
+    }
     releasing(spark, spark.table(t).orderBy("o_orderkey"), t)
   }
 
@@ -1419,19 +1422,21 @@ object Lakehouse {
       "_pid" + ProcessHandle.current().pid()
     val land = new File(tmp, s"graft_eqdcf_land_$tag")
     val chk = new File(tmp, s"graft_eqdcf_chk_$tag")
-    Seq(land, chk).foreach(graft.streaming.StreamingOps.deleteRecursively)
+    Seq(land, chk).foreach(StreamingOps.deleteRecursively)
     base.filter(col("o_orderkey") % 2 === 0)
       .withColumn("o_orderstatus", lit("U"))
       .coalesce(1).write.mode("append").parquet(land.getAbsolutePath)
-    val q = spark.readStream
-      .schema(spark.table(t).schema)
-      .parquet(land.getAbsolutePath)
-      .writeStream
-      .option("checkpointLocation", chk.getAbsolutePath)
-      .option("graft.upsert.key", "o_orderkey")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .toTable(t)
-    graft.streaming.StreamingOps.awaitDrained(q)
+    StreamingOps.withStreamingConf(spark, None) {
+      val q = spark.readStream
+        .schema(spark.table(t).schema)
+        .parquet(land.getAbsolutePath)
+        .writeStream
+        .option("checkpointLocation", chk.getAbsolutePath)
+        .option("graft.upsert.key", "o_orderkey")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .toTable(t)
+      StreamingOps.awaitDrained(q)
+    }
     require(table.eqDeletes.nonEmpty,
       "the feed must be read UNDER the unresolved equality delete")
     releasing(spark, spark.read
@@ -1596,7 +1601,7 @@ object Lakehouse {
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
       "_pid" + ProcessHandle.current().pid()
     val wh = new File(tmp, s"graft_ctas_wh_$tag")
-    graft.streaming.StreamingOps.deleteRecursively(wh)
+    StreamingOps.deleteRecursively(wh)
     spark.conf.set("spark.sql.catalog.gctas",
       classOf[graft.sources.GraftLakeCatalog].getName)
     spark.conf.set("spark.sql.catalog.gctas.warehouse", wh.getAbsolutePath)
@@ -1640,7 +1645,7 @@ object Lakehouse {
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_") +
       "_pid" + ProcessHandle.current().pid()
     val wh = new File(tmp, s"graft_cw_wh_$tag")
-    graft.streaming.StreamingOps.deleteRecursively(wh)
+    StreamingOps.deleteRecursively(wh)
     Seq("gcw", "gcw2").foreach { c =>
       spark.conf.set(s"spark.sql.catalog.$c",
         classOf[graft.sources.GraftLakeCatalog].getName)

@@ -12,6 +12,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.Query
 import graft.functions.DotProduct
 import graft.sources.Tables
+import graft.streaming.StreamingOps
 
 /** Similarity search over an embedding column (ARRAY<FLOAT>, 64-dim).
   *
@@ -657,21 +658,23 @@ object Similarity {
       when(DotProduct(col("e"), typedLit(multiPlanes(k))) > 0, lit(1L << k))
         .otherwise(lit(0L))).reduce(_ + _)
     val schema = spark.read.parquet(chunks.getAbsolutePath).schema
-    val q = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(chunks.getAbsolutePath)
-      .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-      .withColumn("bucket", signature)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.write.mode("append").partitionBy("bucket")
-          .parquet(idx.getAbsolutePath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    graft.streaming.StreamingOps.awaitDrained(q)
+    StreamingOps.withStreamingConf(spark, None) {
+      val q = spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(chunks.getAbsolutePath)
+        .select(col("vec_id"), asDouble(col("embedding")).as("e"))
+        .withColumn("bucket", signature)
+        .writeStream
+        .outputMode("append")
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.write.mode("append").partitionBy("bucket")
+            .parquet(idx.getAbsolutePath)
+        }
+        .trigger(Trigger.AvailableNow())
+        .start()
+      StreamingOps.awaitDrained(q)
+    }
     // probe prep: vector 0's embedding + its multiprobe keys (driver-side
     // scalars, like the IVF probe's centroid ids)
     val p0 = Tables(spark, sfDir, "embeddings")

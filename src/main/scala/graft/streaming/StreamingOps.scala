@@ -4,9 +4,11 @@ import java.time.Instant
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.{DecimalType, DoubleType, TimestampNTZType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Query
 import graft.functions.Exact._
@@ -48,59 +50,78 @@ case class SessionRow(
   * evicted), and the stateful aggregation shuffles on (window, key) exactly
   * like the batch plan. The memory sink here is the test harness stand-in
   * for a real sink (kafka/delta/parquet appends).
+  *
+  * Checkpoint cost: every micro-batch writes about 7 checkpoint files
+  * (offset log, source log, commit log, a state delta per store
+  * partition). Through Hadoop's local filesystem each create or rename
+  * forks a `chmod` or `readlink` process when the native Hadoop library
+  * is absent (as in this JVM): 31–52 ms per file, ~3.1 s of the
+  * stream_drain slice's 14.3 s of trigger time. Every query therefore
+  * starts inside [[withStreamingConf]], which installs
+  * [[GraftCheckpointFileManager]] (java.nio, 0.1–0.2 ms per file). Spark's
+  * v1 file writes (`FileOutputCommitter`: foreachBatch parquet sinks,
+  * the parquet stream sink) still go through Hadoop and still fork.
   */
 object StreamingOps {
 
   private val sinkId = new AtomicLong(0)
 
-  /** Run `body` with `spark.sql.shuffle.partitions` lowered for the
-    * streaming query it starts. Stateful streaming partitioning is sticky
-    * (pinned by the first checkpoint) and each micro-batch COMMITS every
-    * state store partition — so the partition count must track state
-    * volume, not CPU count: at harness scale 2 partitions hold the state
-    * comfortably and cut per-batch store-commit fan-out 16×. Two
-    * interleaved A/Bs at sf0.1 over the 5 heaviest streaming queries:
-    * 8→4 partitions 41.3/40.8 → 34.7/34.9 s (the stream-stream outer
-    * join, which commits 4 stores per partition per side, gained ~27%),
-    * then 4→2 a further consistent ~6% (41.3/39.8 → 39.1/36.9 s) — each
-    * halving trims the per-batch commit fan-out with state volumes this
-    * small. The hard-coded 2 is a HARNESS-SCALE constant — right for
-    * sf0.1's state volumes, re-tuned by interleaved A/B per benchmark
-    * round, and NOT a formula: at larger sf (or in production) the same
-    * measurement would land higher, because the constraint is that each
-    * store partition's state fits and compacts comfortably, and more
-    * state wants more partitions. A production deployment sizes this
-    * once per query at first deploy (it cannot be changed without a new
-    * checkpoint) — keyed to peak in-flight state, exactly as the A/B
-    * here was. Batch queries in the same session are unaffected: the
-    * conf is restored before the post-stream batch read.
+  /** Run `body` — a streaming start and its drain — with the engine's
+    * streaming confs set on `spark`, restored in `finally`: the ONE scope
+    * around every streaming start in the engine, so no start can miss a
+    * conf and a body that throws cannot leak one into the next query.
+    * Scoping the whole drain, not just `start()`, matters: the query's
+    * own session is cloned at start, but a v1 source (the file stream
+    * source) builds its offset log on the stream thread after `start()`
+    * returns, from the caller's session.
     *
-    * Round-8 re-tune (after the TIMESTAMP_NTZ source fix restored all 20
-    * streaming queries): ABAB sweep 2 vs 4 over the 5 heaviest streaming
-    * queries at sf0.1 read 47.3/42.0 s vs 43.4/43.7 s — means within
-    * 2.5%, i.e. noise. The pinned 2 stays (smaller per-batch store-commit
-    * fan-out at equal measured cost).
+    * Always set: [[GraftCheckpointFileManager]], so checkpoint files are
+    * written through java.nio instead of a Hadoop local filesystem that
+    * forks a `chmod`/`readlink` process per create and rename.
+    *
+    * `partitionCap` lowers `spark.sql.shuffle.partitions`, which pins the
+    * state-store partition count in the first checkpoint. Each
+    * micro-batch COMMITS every state store partition, so the count must
+    * track state volume, not CPU count: at harness scale 2 partitions
+    * hold the state comfortably and cut per-batch store-commit fan-out
+    * 16×. Two interleaved A/Bs at sf0.1 over the 5 heaviest streaming
+    * queries: 8→4 partitions 41.3/40.8 → 34.7/34.9 s, then 4→2 a further
+    * consistent ~6% (41.3/39.8 → 39.1/36.9 s); a round-8 re-sweep of 2
+    * vs 4 read 47.3/42.0 s vs 43.4/43.7 s (noise), and 2 stays for its
+    * smaller fan-out. The stream-stream joins commit FOUR stores per
+    * partition per side and hold the smallest in-flight state, so they
+    * take 1 (r21 interleaved A/B, min-of-2 at sf0.1: full_outer
+    * 9.17→7.03, join 3.82→2.54, semi 6.72→5.82, left_outer 6.59→6.05;
+    * the aggregation-shaped queries measured WORSE at 1 and keep 2), on
+    * the default HDFS-backed state store (r22's RocksDB + join state v3
+    * measured slower: stream_stream_join 2.51/2.67 s vs 3.98/4.58 s,
+    * dev/r22/ab_{hdfs2,rocks3}_{1,2}.json). These are HARNESS-SCALE
+    * constants, not a formula: a production deployment sizes the count
+    * once per query at first deploy (it cannot change without a new
+    * checkpoint), keyed to peak in-flight state. The cap never RAISES the
+    * count: a session already below it keeps its own. `None` leaves the
+    * session's count alone.
+    *
+    * `conf` adds query-specific settings under the same scope.
     */
-  private def withStreamingPartitions[A](spark: SparkSession,
-      queryCap: Int = 2)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    // `queryCap` is the per-query sizing production does at first deploy
-    // (above): the stream-stream joins commit FOUR state stores per
-    // partition per side each batch, and their in-flight state is the
-    // smallest in the registry, so they take 1 (r21 interleaved A/B,
-    // min-of-2 at sf0.1: full_outer 9.17→7.03, join 3.82→2.54, semi
-    // 6.72→5.82, left_outer 6.59→6.05; the aggregation-shaped queries
-    // measured WORSE at 1 and keep 2). They run on the default
-    // HDFS-backed state store: r22's RocksDB + join-state-format-v3
-    // variant measured slower (stream_stream_join 2.51/2.67 s on HDFS vs
-    // 3.98/4.58 s on RocksDB, dev/r22/ab_{hdfs2,rocks3}_{1,2}.json).
-    // Never RAISE the count: a session already below the state-volume
-    // target must not be lifted to the cap (that would ADD fan-out)
-    val target = math.min(queryCap,
-      scala.util.Try(prev.toInt).getOrElse(queryCap))
-    spark.conf.set(key, target.toString)
-    try body finally spark.conf.set(key, prev)
+  private[graft] def withStreamingConf[A](spark: SparkSession,
+      partitionCap: Option[Int], conf: Map[String, String] = Map.empty)(
+      body: => A): A = {
+    val partitionsKey = "spark.sql.shuffle.partitions"
+    val scoped = conf +
+      (GraftCheckpointFileManager.ConfKey ->
+        classOf[GraftCheckpointFileManager].getName) ++
+      partitionCap.map { cap =>
+        val current = spark.conf.get(partitionsKey)
+        partitionsKey ->
+          math.min(cap, scala.util.Try(current.toInt).getOrElse(cap)).toString
+      }
+    val prev = scoped.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Await an AvailableNow drain AND prove it ingested at least one row.
@@ -184,7 +205,7 @@ object StreamingOps {
       .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
     val name = s"graft_stream_tumbling_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
+    withStreamingConf(spark, Some(2)) {
       val q = agg.writeStream
         .outputMode("complete")
         .format("memory")
@@ -261,7 +282,7 @@ object StreamingOps {
       }
 
     val name = s"graft_stream_sessionize_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
+    withStreamingConf(spark, Some(2)) {
       val q = sessions.toDF().writeStream
         .outputMode("append")
         .format("memory")
@@ -312,7 +333,7 @@ object StreamingOps {
     val doubled = src().union(src())
     val deduped = doubled.dropDuplicates("event_id")
     val name = s"graft_stream_dedup_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
+    withStreamingConf(spark, Some(2)) {
       val q = deduped.writeStream
         .outputMode("append")
         .format("memory")
@@ -355,7 +376,7 @@ object StreamingOps {
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
     val upserted =
       new java.util.concurrent.ConcurrentHashMap[String, (Long, Double)]
-    withStreamingPartitions(spark) {
+    withStreamingConf(spark, Some(2)) {
       val q = agg.writeStream
         .outputMode("update")
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -410,7 +431,7 @@ object StreamingOps {
     val agg = eventStream(spark, sfDir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-    withStreamingPartitions(spark) {
+    withStreamingConf(spark, Some(2)) {
       val q = agg.writeStream
         .outputMode("update")
         .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -448,7 +469,7 @@ object StreamingOps {
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
     val name = s"graft_stream_enrich_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
+    withStreamingConf(spark, Some(2)) {
       val q = agg.writeStream
         .outputMode("complete")
         .format("memory")
@@ -480,7 +501,7 @@ object StreamingOps {
     val src = eventStream(spark, sfDir)
     val joined = signupPurchaseJoin(src, "inner", keepSentinels = false)
     val name = s"graft_stream_ssjoin_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark, queryCap = 1) {
+    withStreamingConf(spark, Some(1)) {
       val q = joined.writeStream
         .outputMode("append")
         .format("memory")
@@ -555,21 +576,26 @@ object StreamingOps {
       Tables(spark, sfDir, "events")
         .repartitionByRange(4, col("ts"), col("event_id"))
         .write.mode("overwrite").parquet(d.getAbsolutePath)
-      // the file stream source ingests in MODIFICATION-TIME order, and the
-      // 4 parallel write tasks finish within the same millisecond — left
-      // alone, batch order is arbitrary, a late-range file can go first,
-      // and its watermark marks every earlier-range file late (stateful
-      // joins then drop them ALL; complete-mode aggs hide this because
-      // they ignore watermarks). Range partition k holds the k-th ts
-      // range, so spacing mtimes in part-file order makes arrival order =
-      // event-time order — exactly how a real landing zone behaves.
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified(((System.currentTimeMillis() / 60000) * 60000)
-            + i * 1000L)
-        }
+      sequenceArrivals(d)
     }
+
+  /** Space the part files' mtimes one second apart in name order. The
+    * file stream source ingests in MODIFICATION-TIME order, and the 4
+    * parallel write tasks finish within the same millisecond — left
+    * alone, batch order is arbitrary, a late-range file can go first, and
+    * its watermark marks every earlier-range file late (stateful joins
+    * then drop them ALL; complete-mode aggs hide this because they ignore
+    * watermarks). Range partition k holds the k-th ts range, so spacing
+    * mtimes in part-file order makes arrival order = event-time order —
+    * exactly how a real landing zone behaves.
+    */
+  private def sequenceArrivals(d: java.io.File): Unit =
+    Option(d.listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      .zipWithIndex.foreach { case (f, i) =>
+        f.setLastModified(((System.currentTimeMillis() / 60000) * 60000)
+          + i * 1000L)
+      }
 
   /** One-file-per-trigger chunked source over the staged ts-range files
     * (ts arrives TIMESTAMP_NTZ from [[Tables]]' normalization; cast to LTZ
@@ -603,43 +629,43 @@ object StreamingOps {
     * [[sessionizeIncremental]]).
     */
   private[graft] def chunkedEventsWithSentinelDir(
-      spark: SparkSession, sfDir: String): java.io.File =
+      spark: SparkSession, sfDir: String): java.io.File = {
+    val chunks = chunkedEventsDir(spark, sfDir)
+    // the chunked generation's name is its fingerprint: restaging it
+    // restages this copy too
+    val spec = s"copy-of-${chunks.getName}+2-sentinels;mtime-sequenced-v5"
     graft.operators.Staging.stagedDir("graft_stream_chunks_sent", sfDir,
-      spec = "4-range-files+2-sentinels;mtime-sequenced-v4") { d =>
-      val ev = Tables(spark, sfDir, "events")
-      ev.repartitionByRange(4, col("ts"), col("event_id"))
-        .write.mode("overwrite").parquet(d.getAbsolutePath)
-      Seq(("2", "z1"), ("4", "z2")).foreach { case (hours, tag) =>
-        val tmp = new java.io.File(d, "_sentinel_tmp")
-        ev.agg(max(col("ts")).as("m")).coalesce(1)
-          .select(
-            lit(-1L).as("event_id"),
-            (col("m") + expr(s"INTERVAL '$hours' HOUR")).as("ts"),
-            lit(-1L).as("user_id"),
-            lit("sentinel").as("event_type"),
-            lit(0.0).as("value"),
-            lit("{}").as("props"))
-          .write.mode("overwrite").parquet(tmp.getAbsolutePath)
-        val part = Option(tmp.listFiles()).getOrElse(Array.empty)
-          .find(f => f.getName.startsWith("part-")
-            && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error("sentinel part file missing"))
-        // "part-z..." sorts after part-0000N, so the mtime sequencing
-        // below puts the sentinels LAST in arrival order
-        java.nio.file.Files.move(part.toPath,
-          new java.io.File(d, s"part-$tag-sentinel.parquet").toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        Option(tmp.listFiles()).getOrElse(Array.empty)
-          .foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
-        java.nio.file.Files.deleteIfExists(tmp.toPath)
-      }
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified(((System.currentTimeMillis() / 60000) * 60000)
-            + i * 1000L)
+      spec) { d =>
+      import java.nio.file.{Files, StandardCopyOption}
+      // COPIES of the staged range files, not hard links: a link shares
+      // the inode, and with it the mtime the sequencing below sets
+      Option(chunks.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.startsWith("part-"))
+        .foreach(f => Files.copy(f.toPath, new java.io.File(d, f.getName)
+          .toPath, StandardCopyOption.REPLACE_EXISTING))
+      val ev = spark.read.parquet(chunks.getAbsolutePath)
+      val maxMicros = org.apache.spark.sql.catalyst.util.DateTimeUtils
+        .localDateTimeToMicros(ev.agg(max(col("ts"))).head()
+          .getAs[java.time.LocalDateTime](0))
+      // "part-z..." sorts after part-0000N, so the sequencing puts the
+      // sentinels LAST in arrival order
+      Seq((2, "z1"), (4, "z2")).foreach { case (hours, tag) =>
+        val row: Array[Any] = ev.schema.fieldNames.map {
+          case "event_id" | "user_id" => -1L
+          case "ts" => maxMicros + hours * 3600L * 1000000L
+          case "event_type" => UTF8String.fromString("sentinel")
+          case "value" => 0.0
+          case "props" => UTF8String.fromString("{}")
         }
+        val f = new java.io.File(d, s"part-$tag-sentinel.parquet")
+        Files.deleteIfExists(f.toPath) // left by an interrupted staging
+        graft.sources.GraftParquetIO.write(f.getAbsolutePath,
+          ev.schema.fieldNames.toSeq, ev.schema.map(_.dataType),
+          Vector(new GenericInternalRow(row)))
+      }
+      sequenceArrivals(d)
     }
+  }
 
   /** The incremental sessionizer re-expressed on `transformWithState` —
     * Spark 4's arbitrary-state API that replaces flatMapGroupsWithState:
@@ -743,26 +769,17 @@ object StreamingOps {
       .transformWithState(new TwsSessionizer,
         TimeMode.EventTime(), OutputMode.Append())
     val name = s"graft_stream_sess_tws_${sinkId.incrementAndGet()}"
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
     // transformWithState requires the RocksDB state store
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      withStreamingPartitions(spark, queryCap = 1) {
-        val q = sessions.toDF().writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        awaitDrained(q)
-      }
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
+    withStreamingConf(spark, Some(1), Map(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
+      val q = sessions.toDF().writeStream
+        .outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      awaitDrained(q)
     }
     spark.table(name)
       .filter(col("user_id") >= 0) // drop the sentinel user's sessions
@@ -796,7 +813,7 @@ object StreamingOps {
       .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
     val name = s"graft_stream_tumbling_app_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
+    withStreamingConf(spark, Some(2)) {
       val q = agg.writeStream
         .outputMode("append")
         .format("memory")
@@ -829,7 +846,7 @@ object StreamingOps {
       .groupBy(window(col("ts"), "10 minutes", "5 minutes"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
     val name = s"graft_stream_sliding_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
+    withStreamingConf(spark, Some(2)) {
       val q = agg.writeStream
         .outputMode("complete")
         .format("memory")
@@ -893,7 +910,7 @@ object StreamingOps {
         sum(col("sv_dec")).cast(DoubleType).as("sum_value"),
         count(lit(1)).as("n_subwindows"))
     val name = s"graft_stream_rollup_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
+    withStreamingConf(spark, Some(2)) {
       val q = hourly.writeStream
         .outputMode("append")
         .format("memory")
@@ -1005,7 +1022,7 @@ object StreamingOps {
       }
 
     val name = s"graft_stream_sess_incr_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
+    withStreamingConf(spark, Some(2)) {
       val q = sessions.toDF().writeStream
         .outputMode("append")
         .format("memory")
@@ -1036,7 +1053,7 @@ object StreamingOps {
       .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
     val name = s"graft_stream_incr_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
+    withStreamingConf(spark, Some(2)) {
       val q = agg.writeStream
         .outputMode("complete")
         .format("memory")
@@ -1075,7 +1092,7 @@ object StreamingOps {
       .withColumn("ts", col("ts").cast("timestamp"))
     val joined = signupPurchaseJoin(src, "leftOuter", keepSentinels = true)
     val name = s"graft_stream_louter_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark, queryCap = 1) {
+    withStreamingConf(spark, Some(1)) {
       val q = joined.writeStream
         .outputMode("append")
         .format("memory")
@@ -1113,7 +1130,7 @@ object StreamingOps {
       .withColumn("ts", col("ts").cast("timestamp"))
     val joined = signupPurchaseJoin(src, "left_semi", keepSentinels = true)
     val name = s"graft_stream_semi_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark, queryCap = 1) {
+    withStreamingConf(spark, Some(1)) {
       val q = joined.writeStream
         .outputMode("append")
         .format("memory")
@@ -1167,7 +1184,7 @@ object StreamingOps {
       .withColumn("ts", col("ts").cast("timestamp"))
     val joined = signupPurchaseJoin(src, "fullOuter", keepSentinels = true)
     val name = s"graft_stream_fouter_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark, queryCap = 1) {
+    withStreamingConf(spark, Some(1)) {
       val q = joined.writeStream
         .outputMode("append")
         .format("memory")
@@ -1218,7 +1235,7 @@ object StreamingOps {
         .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
     }
     val ev = eventStream(spark, sfDir)
-    withStreamingPartitions(spark) {
+    withStreamingConf(spark, Some(2)) {
       val q = ev.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("append").parquet(dir.getAbsolutePath)
@@ -1266,7 +1283,7 @@ object StreamingOps {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
     val name = s"graft_stream_observe_${sinkId.incrementAndGet()}"
-    val q = withStreamingPartitions(spark) {
+    val q = withStreamingConf(spark, Some(2)) {
       val q = agg.writeStream
         .outputMode("complete")
         .format("memory")
@@ -1323,7 +1340,7 @@ object StreamingOps {
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
     val name = s"graft_stream_sesswin_${sinkId.incrementAndGet()}"
-    withStreamingPartitions(spark) {
+    withStreamingConf(spark, Some(2)) {
       val q = agg.writeStream
         .outputMode("append")
         .format("memory")
@@ -1359,7 +1376,7 @@ object StreamingOps {
   private[graft] def drainLog(
       spark: SparkSession, topic: String, chk: java.io.File,
       sink: java.io.File, maxRecordsPerTrigger: Long): Unit =
-    withStreamingPartitions(spark) {
+    withStreamingConf(spark, Some(2)) {
       val q = spark.readStream
         .format(classOf[InMemoryLogProvider].getName)
         .option("topic", topic)

@@ -48,4 +48,37 @@ private[graft] trait StreamingRestartHarness { self: SparkTestBase =>
       q
     }
   }
+
+  /** [[graft.streaming.StreamingOps.drainLog]]'s query started OUTSIDE
+    * the engine's streaming scope, so it checkpoints through Spark's
+    * default manager (Hadoop's local filesystem): one side of the
+    * cross-manager restart tests.
+    */
+  def drainLogSparkDefault(topic: String, chk: File, sink: File,
+      maxRecordsPerTrigger: Long): Unit = {
+    val q = spark.readStream
+      .format(classOf[graft.streaming.InMemoryLogProvider].getName)
+      .option("topic", topic)
+      .option("maxRecordsPerTrigger", maxRecordsPerTrigger.toString)
+      .load()
+      .writeStream
+      .outputMode("append")
+      .option("checkpointLocation", chk.getAbsolutePath)
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        b.write.mode("append").parquet(sink.getAbsolutePath)
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+    graft.streaming.StreamingOps.awaitDrained(q)
+  }
+
+  /** Hadoop `.<name>.crc` sidecars anywhere under `dir` — Spark 4.1's own
+    * `<name>.crc` checksum files are not hidden and do not count. */
+  def hadoopSidecars(dir: File): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(dir.toPath)
+    try walk.iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.startsWith(".") && n.endsWith(".crc")).toSeq
+    finally walk.close()
+  }
 }

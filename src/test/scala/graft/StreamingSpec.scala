@@ -485,4 +485,199 @@ class StreamingSpec extends SparkTestBase with StreamingRestartHarness {
       s"guard must name the zero-row condition, got: ${e.getMessage}")
     StreamingOps.deleteRecursively(tmp)
   }
+
+  // --- the java.nio checkpoint manager (GraftCheckpointFileManager) ---
+
+  private def checkpointManagers(dir: java.io.File) = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    val root = new Path(dir.toURI)
+    val conf = spark.sparkContext.hadoopConfiguration
+    (new graft.streaming.GraftCheckpointFileManager(root, conf),
+      CheckpointFileManager.create(root, conf)) // Spark's default
+  }
+
+  private def publish(
+      fm: org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager,
+      p: org.apache.hadoop.fs.Path, text: String, overwrite: Boolean): Unit = {
+    val out = fm.createAtomic(p, overwrite)
+    out.write(text.getBytes("UTF-8"))
+    out.close()
+  }
+
+  test("checkpoint manager: a no-overwrite publish onto an existing file " +
+      "throws Hadoop's FileAlreadyExistsException, target unchanged") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cfm_clash").toFile
+    val (fm, _) = checkpointManagers(dir)
+    val target = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(
+      dir.toURI), "7")
+    publish(fm, target, "first writer", overwrite = false)
+    // a second query writing the same batch file: HDFSMetadataLog catches
+    // exactly this class to report two queries sharing a checkpoint
+    val out = fm.createAtomic(target, overwriteIfPossible = false)
+    out.write("second writer".getBytes("UTF-8"))
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException](out.close())
+    out.cancel() // what HDFSMetadataLog does next; must be harmless
+    assert(java.nio.file.Files.readString(new java.io.File(dir, "7").toPath)
+      == "first writer")
+    assert(dir.list().toSeq == Seq("7"), s"temp file left: ${dir.list().toSeq}")
+    graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
+
+  test("checkpoint manager: cancel() leaves no temp file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cfm_cancel").toFile
+    val (fm, _) = checkpointManagers(dir)
+    val out = fm.createAtomic(new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(dir.toURI), "3.delta"),
+      overwriteIfPossible = true)
+    out.write(Array.fill[Byte](100000)(1))
+    assert(dir.list().exists(n => n.startsWith(".3.delta.") && n.endsWith(".tmp")),
+      "the bytes go to a hidden temp file until close()")
+    out.cancel()
+    out.cancel()
+    assert(dir.list().isEmpty, s"left behind: ${dir.list().toSeq}")
+    graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
+
+  test("checkpoint manager: an overwrite replaces the file and drops a " +
+      "stale Hadoop .crc sidecar, never Spark's own checksum file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cfm_over").toFile
+    val (fm, sparkDefault) = checkpointManagers(dir)
+    val target = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(
+      dir.toURI), "1.snapshot")
+    // first written through Hadoop's local filesystem, which leaves a
+    // `.1.snapshot.crc` sidecar; Spark 4.1 checksum files are `<name>.crc`
+    publish(sparkDefault, target, "old state", overwrite = true)
+    val sparkChecksum = new java.io.File(dir, "1.snapshot.crc")
+    java.nio.file.Files.writeString(sparkChecksum.toPath, "spark checksum")
+    assert(new java.io.File(dir, ".1.snapshot.crc").exists())
+    publish(fm, target, "new state, longer", overwrite = true)
+    assert(dir.list().toSet == Set("1.snapshot", "1.snapshot.crc"),
+      s"stale sidecar or temp file left: ${dir.list().toSeq}")
+    assert(java.nio.file.Files.readString(sparkChecksum.toPath) ==
+      "spark checksum")
+    // read back through the checksummed Hadoop path both managers share:
+    // a stale sidecar would fail this with a ChecksumException
+    val in = fm.open(target)
+    try assert(new String(in.readAllBytes(), "UTF-8") == "new state, longer")
+    finally in.close()
+    graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
+
+  /** Drain 60 log records under `first`, append 40, resume the same
+    * checkpoint under `second`: every record must land exactly once. */
+  private def restartAcrossManagers(topic: String)(
+      first: (String, java.io.File, java.io.File) => Unit,
+      second: (String, java.io.File, java.io.File) => Unit)
+      : (java.io.File, Seq[String]) = {
+    import graft.streaming.InMemoryLog
+    import InMemoryLog.Record
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cfm_restart").toFile
+    val chk = new java.io.File(tmp, "chk")
+    val sink = new java.io.File(tmp, "sink")
+    val records = (0 until 100).map(i =>
+      Record(i.toLong, i.toLong % 7, s"t${i % 3}", i.toDouble))
+    InMemoryLog.reset(topic)
+    InMemoryLog.append(topic, records.take(60))
+    first(topic, chk, sink)
+    val sidecarsAfterFirst = hadoopSidecars(chk)
+    InMemoryLog.append(topic, records.drop(60))
+    second(topic, chk, sink)
+    val landed = spark.read.parquet(sink.getAbsolutePath)
+    assert(landed.count() == 100 &&
+      landed.select("event_id").distinct().count() == 100,
+      "each log record written exactly once across the restart")
+    (tmp, sidecarsAfterFirst)
+  }
+
+  test("restart across checkpoint managers stays exactly-once, both " +
+      "directions") {
+    import graft.streaming.StreamingOps
+    val ours = (t: String, chk: java.io.File, sink: java.io.File) =>
+      StreamingOps.drainLog(spark, t, chk, sink, maxRecordsPerTrigger = 25)
+    val sparkDefault = (t: String, chk: java.io.File, sink: java.io.File) =>
+      drainLogSparkDefault(t, chk, sink, maxRecordsPerTrigger = 25)
+
+    val (a, fromDefault) =
+      restartAcrossManagers("spec_cfm_default_then_ours")(sparkDefault, ours)
+    assert(fromDefault.nonEmpty,
+      "the first run really went through Hadoop's filesystem")
+    assert(hadoopSidecars(new java.io.File(a, "chk")).toSet == fromDefault.toSet,
+      "the resumed run under the java.nio manager added no sidecars")
+    StreamingOps.deleteRecursively(a)
+
+    val (b, fromOurs) =
+      restartAcrossManagers("spec_cfm_ours_then_default")(ours, sparkDefault)
+    assert(fromOurs.isEmpty, s"sidecars under the java.nio manager: $fromOurs")
+    StreamingOps.deleteRecursively(b)
+  }
+
+  test("a drain's checkpoint directory holds no Hadoop .crc sidecars") {
+    import graft.streaming.{InMemoryLog, StreamingOps}
+    import InMemoryLog.Record
+    val topic = "spec_cfm_no_sidecars"
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cfm_drain").toFile
+    val chk = new java.io.File(tmp, "chk")
+    InMemoryLog.reset(topic)
+    InMemoryLog.append(topic,
+      (0 until 20).map(i => Record(i.toLong, i % 3L, s"t${i % 2}", i.toDouble)))
+    StreamingOps.drainLog(spark, topic, chk, new java.io.File(tmp, "sink"),
+      maxRecordsPerTrigger = 5)
+    assert(new java.io.File(chk, "commits").list().exists(_.forall(_.isDigit)),
+      "the drain committed batches")
+    assert(hadoopSidecars(chk).isEmpty,
+      s"Hadoop sidecars in the checkpoint: ${hadoopSidecars(chk)}")
+    StreamingOps.deleteRecursively(tmp)
+  }
+
+  test("a stateful drain checkpoints its state through the java.nio manager") {
+    // the state store writes a delta file per store partition per batch —
+    // most of a stateful micro-batch's checkpoint files
+    import graft.streaming.StreamingOps
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cfm_state").toFile
+    val chk = new java.io.File(tmp, "chk")
+    val counts = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    StreamingOps.withStreamingConf(spark, Some(2)) {
+      val q = StreamingOps.chunkedSource(spark, Sf)
+        .groupBy(col("event_type")).count()
+        .writeStream
+        .outputMode("complete")
+        .option("checkpointLocation", chk.getAbsolutePath)
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          b.collect().foreach(r => counts.put(r.getString(0), r.getLong(1)))
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      StreamingOps.awaitDrained(q)
+    }
+    import scala.jdk.CollectionConverters._
+    val want = spark.read.parquet(s"$Sf/events.parquet")
+      .groupBy("event_type").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(counts.asScala.toMap == want)
+    val deltas = new java.io.File(chk, "state/0")
+      .listFiles().flatMap(_.list()).count(_.endsWith(".delta"))
+    assert(deltas >= 2 * 4, s"4 batches × 2 store partitions, got $deltas")
+    assert(hadoopSidecars(chk).isEmpty,
+      s"Hadoop sidecars in the checkpoint: ${hadoopSidecars(chk)}")
+    StreamingOps.deleteRecursively(tmp)
+  }
+
+  test("the streaming scope restores shuffle partitions and the checkpoint " +
+      "manager when its body throws") {
+    import graft.streaming.{GraftCheckpointFileManager, StreamingOps}
+    val partitions = "spark.sql.shuffle.partitions"
+    val manager = GraftCheckpointFileManager.ConfKey
+    val before = (spark.conf.get(partitions), spark.conf.getOption(manager))
+    val e = intercept[IllegalStateException] {
+      StreamingOps.withStreamingConf(spark, Some(1)) {
+        assert(spark.conf.get(partitions) == "1")
+        assert(spark.conf.get(manager) ==
+          classOf[GraftCheckpointFileManager].getName)
+        throw new IllegalStateException("start failed")
+      }
+    }
+    assert(e.getMessage == "start failed")
+    assert((spark.conf.get(partitions), spark.conf.getOption(manager)) == before)
+  }
 }
